@@ -3,8 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.types.MetadataBuilder
 import graft.sources.Tables
+import ArtifactCatalog.AnnStamp
 
 /** Persisted IVF-PQ index artifacts — the "index once, query many"
   * production seam for the ANN stack, the ANN twin of the dedup band-index
@@ -55,36 +55,22 @@ object AnnIndex {
       s"pqK=${Clustering.PqK};pqIters=${Clustering.PqIters};scale=${Clustering.Scale};" +
       s"residual=$residual"
 
-  private val MetaKey = "graft.ann.ivfpq"
+  private def stamp(df: DataFrame, colName: String, residual: Boolean): DataFrame =
+    AnnStamp.stamp(df, fingerprint(residual), colName)
 
-  private def stamp(df: DataFrame, colName: String, residual: Boolean): DataFrame = {
-    val m = new MetadataBuilder().putString(MetaKey, fingerprint(residual)).build()
-    df.withColumn(colName, col(colName).as(colName, m))
-  }
+  /** The stored stamp's encoding flag — the store, not the caller, says
+    * whether its codes are residuals.
+    */
+  private def storedResidual(df: DataFrame, colName: String): Boolean =
+    AnnStamp.stored(df.schema, colName).exists(_.contains("residual=true"))
 
-  /** The stored conf stamp, if the artifact carries one. */
-  private def storedStamp(df: DataFrame, colName: String): Option[String] =
-    df.schema.fields.find(_.name == colName)
-      .filter(_.metadata.contains(MetaKey))
-      .map(_.metadata.getString(MetaKey))
-
-  /** Fail FAST on conf drift — and (r10, the LmIndex hardening applied
-    * here too) on a MISSING stamp: an unstamped parquet directory is a
-    * foreign or hand-rolled table, and decoding it under the live conf
-    * is exactly the silent mis-decode the stamp exists to prevent.
+  /** Fail fast on a missing stamp or on drift from the live conf for the
+    * encoding the READER asks for: a residual store decoded as raw codes
+    * (or vice versa) is silent garbage.
     */
   private[graft] def validateConf(df: DataFrame, colName: String, what: String,
       residual: Boolean = false): Unit =
-    storedStamp(df, colName) match {
-      case None => throw new IllegalStateException(
-        s"$what carries no $MetaKey conf stamp — not a graft-written ANN artifact " +
-          "(or written by a pre-stamp build); refusing to decode it blind — rebuild the index")
-      case Some(stored) =>
-        if (stored != fingerprint(residual)) throw new IllegalStateException(
-          s"$what was built with ANN conf [$stored] but the live spark.graft.* conf is " +
-            s"[${fingerprint(residual)}]; stored codes would silently mis-decode — " +
-            "rebuild the index or align the conf")
-    }
+    AnnStamp.check(df, what, colName, Some(fingerprint(residual)))
 
   /** Coarse-cell assignment of scaled vectors against GIVEN centroids:
     * (vec_id, cell). Broadcast centroids, one scan.
@@ -257,7 +243,7 @@ object AnnIndex {
     */
   def appendToIvfPq(spark: SparkSession, indexPath: String, embs: DataFrame): Unit = {
     val cb = spark.read.parquet(s"$indexPath/codebooks")
-    val residual = storedStamp(cb, "cemb").exists(_.contains("residual=true"))
+    val residual = storedResidual(cb, "cemb")
     validateConf(cb, "cemb",
       s"stored IVF-PQ codebooks at $indexPath", residual)
     // The centroids table is validated too (r11): an append encodes
@@ -288,7 +274,7 @@ object AnnIndex {
     */
   def compactIvfPq(spark: SparkSession, indexPath: String): Unit = {
     val codes = spark.read.parquet(s"$indexPath/codes")
-    val residual = storedStamp(codes, "codes").exists(_.contains("residual=true"))
+    val residual = storedResidual(codes, "codes")
     validateConf(codes, "codes",
       s"stored IVF-PQ code table at $indexPath", residual)
     graft.sources.Sinks.compactSwap(spark, s"$indexPath/codes",
@@ -402,8 +388,8 @@ object AnnIndex {
   def annTopKIvfPqStored(spark: SparkSession, dir: String): DataFrame = {
     // build-half amortization + the applicationId salt the un-cached
     // branch carries (two concurrent sessions must never race
-    // overwrite-vs-read on one store root) — [[Similarity.storedStoreRoot]]
-    val path = Similarity.storedStoreRoot(spark, "graft-ann-store", dir,
+    // overwrite-vs-read on one store root) — [[ArtifactCatalog.storedDirRoot]]
+    val path = ArtifactCatalog.storedDirRoot(spark, "graft-ann-store", dir,
       ivfPqFingerprint)(p => writeIvfPq(spark, dir, p))
     ivfPqTopK(spark, path, dir)
   }
@@ -422,7 +408,7 @@ object AnnIndex {
   def retractFromIvfPq(spark: SparkSession, indexPath: String,
       retractIds: DataFrame): Unit = {
     val codes = spark.read.parquet(s"$indexPath/codes")
-    val residual = storedStamp(codes, "codes").exists(_.contains("residual=true"))
+    val residual = storedResidual(codes, "codes")
     validateConf(codes, "codes",
       s"stored IVF-PQ code table at $indexPath", residual)
     val ids = retractIds.select(col("doc_id").as("vec_id")).localCheckpoint(true)

@@ -136,7 +136,7 @@ object Bpe {
     * the oracle gate itself.
     */
   private[graft] def storedTrainedVocab(spark: SparkSession, dir: String): DataFrame =
-    Dedup.storedIndex(spark, s"bpevocab-m${GraftConf.bpeMerges}", dir)(
+    ArtifactCatalog.storedIndex(spark, s"bpevocab-m${GraftConf.bpeMerges}", dir)(
       bpeTrainedOf(Tables.documents(spark, dir))._1)
 
   /** Unordered (doc_id, n_words, n_bpe_tokens) core — shared by
@@ -224,17 +224,12 @@ object Bpe {
   // artifact.
   // ------------------------------------------------------------------
 
-  private val MetaKey = "graft.bpe"
-
   /** The one knob that changes the stored bytes. */
   def bpeFingerprint: String = s"merges=${GraftConf.bpeMerges}"
 
   /** Train on the corpus at `dir` and persist the merge table. */
   def writeMerges(spark: SparkSession, dir: String, path: String): Unit = {
-    val m = new org.apache.spark.sql.types.MetadataBuilder()
-      .putString(MetaKey, bpeFingerprint).build()
-    bpeTrain(spark, dir)
-      .withColumn("new_sym", col("new_sym").as("new_sym", m))
+    ArtifactCatalog.BpeStamp.stamp(bpeTrain(spark, dir))
       .write.mode("overwrite").parquet(path)
     Dedup.releaseIntermediates()
   }
@@ -245,18 +240,11 @@ object Bpe {
     * definition (≤ `merges` rows); the corpus-grain work is unchanged:
     * one distinct-word projection, one broadcast join, one doc-grain agg.
     * Fails fast if the stored table was trained under a different
-    * `spark.graft.bpe.merges` than the live conf.
+    * `spark.graft.bpe.merges` than the live conf, or carries no stamp.
     */
   def encodeFrom(spark: SparkSession, mergesPath: String, docs: DataFrame): DataFrame = {
     val stored = spark.read.parquet(mergesPath)
-    stored.schema.fields.find(_.name == "new_sym")
-      .filter(_.metadata.contains(MetaKey))
-      .map(_.metadata.getString(MetaKey))
-      .foreach { fp =>
-        if (fp != bpeFingerprint) throw new IllegalStateException(
-          s"stored BPE merge table was trained under [$fp] but the live conf is " +
-            s"[$bpeFingerprint]; token counts would silently disagree — retrain or align the conf")
-      }
+    ArtifactCatalog.BpeStamp.check(stored, s"stored BPE merge table at $mergesPath")
     val ranked = stored.orderBy("rank").select("left_sym", "right_sym").collect()
       .map(r => (r.getString(0), r.getString(1)))
     var enc: Column = concat(lit("||"),

@@ -285,9 +285,9 @@ object Classify {
     val m = LangIdEvalMod
     val tokArr = expr(TrigramArrSpark)
     val train = docs.filter(col("doc_id") % m =!= 0)
-    val cw = Dedup.storedIndex(spark, s"langidcw-m$m", dir)(
+    val cw = ArtifactCatalog.storedIndex(spark, s"langidcw-m$m", dir)(
       nbCountsOf(train, tokArr)._1)
-    val cdc = Dedup.storedIndex(spark, s"langidcdc-m$m", dir)(
+    val cdc = ArtifactCatalog.storedIndex(spark, s"langidcdc-m$m", dir)(
       nbCountsOf(train, tokArr)._2)
     langIdNbFromPreds(docs, m, nbPredictionsFromCounts(docs, m, tokArr, cw, cdc))
   }
@@ -427,9 +427,9 @@ object Classify {
     val m = QnbEvalMod
     val tokArr = split(col("text"), " ")
     val train = labeled.filter(col("doc_id") % m =!= 0)
-    (Dedup.storedIndex(spark, s"qnbcw-m$m-t$QnbTauQint", dir)(
+    (ArtifactCatalog.storedIndex(spark, s"qnbcw-m$m-t$QnbTauQint", dir)(
       nbCountsOf(train, tokArr)._1),
-      Dedup.storedIndex(spark, s"qnbcdc-m$m-t$QnbTauQint", dir)(
+      ArtifactCatalog.storedIndex(spark, s"qnbcdc-m$m-t$QnbTauQint", dir)(
         nbCountsOf(train, tokArr)._2))
   }
 

@@ -2,8 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.MetadataBuilder
 import graft.sources.Tables
+import ArtifactCatalog.NbStamp
 
 /** Persisted Naive-Bayes classifier — the "train once, score many" seam
   * for the labeling stack ([[Classify]]), completing the stored-artifact
@@ -38,8 +38,6 @@ import graft.sources.Tables
   * corpus-scale rung below them.
   */
 object NbIndex {
-
-  private val MetaKey = "graft.nb"
 
   /** The train-slice modulus the given tokenizer tag trains under —
     * `nb_classify`'s knob for word models, `lang_id_nb`'s for char
@@ -84,35 +82,6 @@ object NbIndex {
     }
   }
 
-  private def stamp(df: DataFrame, colName: String, tok: String): DataFrame =
-    stampWith(df, colName, nbFingerprint(tok))
-
-  private def stampWith(df: DataFrame, colName: String, fp: String): DataFrame = {
-    val m = new MetadataBuilder().putString(MetaKey, fp).build()
-    df.withColumn(colName, col(colName).as(colName, m))
-  }
-
-  /** Fail FAST on conf drift — and on a MISSING stamp (the r10 store
-    * discipline): scoring a foreign or unstamped table blind is exactly
-    * the mis-score the stamp exists to prevent. Returns the stored
-    * tokenizer tag so the caller's feature extractor comes from the
-    * MODEL, not from an argument that could disagree with it.
-    */
-  private def validateConf(df: DataFrame, colName: String, what: String): String =
-    df.schema.fields.find(_.name == colName)
-      .filter(_.metadata.contains(MetaKey))
-      .map(_.metadata.getString(MetaKey)) match {
-      case None => throw new IllegalStateException(
-        s"$what carries no $MetaKey conf stamp — not a graft-written NB artifact " +
-          "(or written by a pre-stamp build); refusing to score against it blind — retrain the model")
-      case Some(stored) =>
-        if (stored != fingerprintFor(stored)) throw new IllegalStateException(
-          s"$what was trained with NB conf [$stored] but the live spark.graft.* conf is " +
-            s"[${fingerprintFor(stored)}]; stored log-probabilities would silently mis-score — " +
-            "retrain the model or align the conf")
-        stored
-    }
-
   private def tagsOf(fp: String): Map[String, String] =
     fp.split(";").flatMap(_.split("=", 2) match {
       case Array(k, v) => Some(k -> v); case _ => None
@@ -137,8 +106,8 @@ object NbIndex {
     val train = labeled.filter(col("doc_id") % m =!= 0)
     val (cw, cdc) = Classify.nbCountsOf(train, Classify.tokArrFor(tok))
     graft.sources.Sinks.writeAllParallel(Seq(
-      () => stamp(cw, "lang", tok).write.mode("overwrite").parquet(s"$path/cw"),
-      () => stamp(cdc, "lang", tok).write.mode("overwrite").parquet(s"$path/cdc")))
+      () => NbStamp.stamp(cw, nbFingerprint(tok)).write.mode("overwrite").parquet(s"$path/cw"),
+      () => NbStamp.stamp(cdc, nbFingerprint(tok)).write.mode("overwrite").parquet(s"$path/cdc")))
   }
 
   /** `nb_classify_incr` (r15): the NB APPEND lifecycle as an oracle row —
@@ -156,7 +125,7 @@ object NbIndex {
     // + swap + scoring — amortized mode hands each run a fresh COPY of
     // the pristine artifact ([[LmIndex.docPerplexitySboIncr]]'s shape);
     // uncached, the app-id salt keeps concurrent sessions off one root
-    val path = Dedup.storedDirCopy(spark, "graft-nb-base", dir,
+    val path = ArtifactCatalog.storedDirCopy(spark, "graft-nb-base", dir,
       nbFingerprint("words"))(p => writeNbDocs(docs.filter(!isD), p, "words"))
     appendToNb(spark, path, docs.filter(isD))
     val evalDocs = docs.filter(col("doc_id") % Classify.NbEvalMod === 0)
@@ -185,8 +154,8 @@ object NbIndex {
     val train = labeled.filter(col("doc_id") % Classify.QnbEvalMod =!= 0)
     val (cw, cdc) = Classify.nbCountsOf(train, Classify.tokArrFor("words"))
     val fp = qualityNbFingerprint
-    stampWith(cw, "lang", fp).write.mode("overwrite").parquet(s"$path/cw")
-    stampWith(cdc, "lang", fp).write.mode("overwrite").parquet(s"$path/cdc")
+    NbStamp.stamp(cw, fp).write.mode("overwrite").parquet(s"$path/cw")
+    NbStamp.stamp(cdc, fp).write.mode("overwrite").parquet(s"$path/cdc")
   }
 
   /** APPEND labeled docs' contributions to the stored count tables — the
@@ -223,8 +192,7 @@ object NbIndex {
     // heal BEFORE reading: a prior advance may have crashed between the
     // root renames, leaving the live store absent until rolled forward
     graft.sources.Sinks.healSwap(spark, path)
-    val fp = validateConf(spark.read.parquet(s"$path/cw"), "lang",
-      s"stored NB count table at $path/cw")
+    val fp = NbStamp.check(spark.read.parquet(s"$path/cw"), s"stored NB count table at $path/cw")
     val tags = tagsOf(fp)
     val m = tags.getOrElse("evalMod", throw new IllegalStateException(
       s"stored NB stamp [$fp] carries no evalMod tag")).toInt
@@ -232,7 +200,7 @@ object NbIndex {
     val (dcw, dcdc) = Classify.nbCountsOf(train, Classify.tokArrFor(tokOf(fp)))
     def merged(sub: String, delta: DataFrame, keys: Seq[String], cnt: String): DataFrame = {
       val stored = spark.read.parquet(s"$path/$sub")
-      validateConf(stored, "lang", s"stored NB count table at $path/$sub")
+      NbStamp.check(stored, s"stored NB count table at $path/$sub")
       // NULL is a real class key here ([[Classify.nbModelFromCounts]] keeps
       // the NULL-lang group as its own class), but a USING join matches with
       // null-unsafe equality — a NULL-labeled delta would duplicate NULL-key
@@ -250,7 +218,7 @@ object NbIndex {
           .select(keys.map(col) :+
             (col(cnt) - coalesce(col("graft_delta_c"), lit(0L))).as(cnt): _*)
           .filter(col(cnt) > 0)
-      stampWith(j, "lang", fp)
+      NbStamp.stamp(j, fp)
     }
     graft.sources.Sinks.swapRoot(spark, path)(Seq(
       "cw" -> merged("cw", dcw, Seq("lang", "word"), "c"),
@@ -266,8 +234,8 @@ object NbIndex {
   def nbScoreFrom(spark: SparkSession, path: String, docs: DataFrame): DataFrame = {
     val cw = spark.read.parquet(s"$path/cw")
     val cdc = spark.read.parquet(s"$path/cdc")
-    val fp = validateConf(cw, "lang", s"stored NB count table at $path/cw")
-    validateConf(cdc, "lang", s"stored NB class-count table at $path/cdc")
+    val fp = NbStamp.check(cw, s"stored NB count table at $path/cw")
+    NbStamp.check(cdc, s"stored NB class-count table at $path/cdc")
     Classify.nbScoreAllOf(docs, Classify.tokArrFor(tokOf(fp)),
       Classify.nbModelFromCounts(cw, cdc))
   }

@@ -477,7 +477,7 @@ object Similarity {
     // bench-session amortization of the codebook TRAIN (the
     // ann_topk_ivfpq_r discipline): the raw train store is SHARED with
     // ann_topk_ivfpq — same centroids+codebooks artifact, built once
-    val path = storedStoreRoot(spark, "graft-ivfpq-train", dir,
+    val path = ArtifactCatalog.storedDirRoot(spark, "graft-ivfpq-train", dir,
       AnnIndex.ivfPqFingerprint)(p => AnnIndex.writeIvfPqTrain(spark, dir, p))
     val (_, cb) = AnnIndex.readIvfPqTrain(spark, path)
     annTopKPqCore(Clustering.scaledEmb(spark, dir), cb)
@@ -624,7 +624,7 @@ object Similarity {
     // bench-session amortization of the TRAIN half through the SHARED
     // raw train store (see annTopKPq); the query half — assignment,
     // probes, encode, cell equi-join, ADC, exact re-rank — re-runs
-    val path = storedStoreRoot(spark, "graft-ivfpq-train", dir,
+    val path = ArtifactCatalog.storedDirRoot(spark, "graft-ivfpq-train", dir,
       AnnIndex.ivfPqFingerprint)(p => AnnIndex.writeIvfPqTrain(spark, dir, p))
     val (cents, cb) = AnnIndex.readIvfPqTrain(spark, path)
     annTopKIvfPqCore(Clustering.scaledEmb(spark, dir), cents, cb)
@@ -795,7 +795,7 @@ object Similarity {
     // retrieval row that still trained in-query. Verify never sets the
     // cache → tmp-root unconditional build; answers are bit-equal either
     // way (trained tables round-trip exactly; parity spec-asserted).
-    val path = storedStoreRoot(spark, "graft-ivfpqr-train", dir,
+    val path = ArtifactCatalog.storedDirRoot(spark, "graft-ivfpqr-train", dir,
       AnnIndex.ivfPqRFingerprint)(p => AnnIndex.writeIvfPqRTrain(spark, dir, p))
     // NOT Intermediates.persist'd: the stored-table query paths broadcast
     // the parquet reads directly (ivfPqTopKFrom's shape) — caching a
@@ -1205,7 +1205,7 @@ object Similarity {
     // root persists across rows/reps and the timed work is the QUERY
     // path (probed cells + pruned postings row groups). Verify never
     // sets the cache → build+query, parity spec-asserted.
-    val path = storedStoreRoot(spark, "graft-hybrid-store", dir,
+    val path = ArtifactCatalog.storedDirRoot(spark, "graft-hybrid-store", dir,
       AnnIndex.ivfPqFingerprint) { p =>
       AnnIndex.writeIvfPq(spark, dir, s"$p/ivfpq")
       PostingsIndex.writePostings(spark, dir, s"$p/lex")
@@ -1213,17 +1213,6 @@ object Similarity {
     hybridSearchRrfStoredFrom(spark, path,
       Tables.documents(spark, dir), Tables.embeddings(spark, dir))
   }
-
-  /** Resolve a stored-index ROOT for a bench row: conf-fingerprinted +
-    * dir-salted path under the bench artifact dir, built once per
-    * session ([[Dedup.storedIndex]]'s discipline for DIRECTORY stores —
-    * the store's own stamp still fail-fasts on any drift the path salt
-    * missed); applicationId-salted tmp dir with an unconditional build
-    * when amortization is off.
-    */
-  private[operators] def storedStoreRoot(spark: SparkSession, name: String, dir: String,
-      fp: String)(build: String => Unit): String =
-    Dedup.storedDirRoot(spark, name, dir, fp)(build)
 
   /** The stored-stack hybrid over ALREADY-written indexes — the spec
     * seam (lexical bit-equality + dense recall are asserted separately).
@@ -1563,7 +1552,7 @@ object Similarity {
     */
   def annMmrRerankStored(spark: SparkSession, dir: String): DataFrame = {
     // same build-half amortization as [[hybridSearchRrfStored]]
-    val path = storedStoreRoot(spark, "graft-mmr-store", dir,
+    val path = ArtifactCatalog.storedDirRoot(spark, "graft-mmr-store", dir,
       AnnIndex.ivfPqFingerprint)(p => AnnIndex.writeIvfPq(spark, dir, p))
     annMmrRerankStoredFrom(spark, path, Tables.embeddings(spark, dir))
   }

@@ -664,7 +664,7 @@ object TextAnalysis {
     // uncached path builds + scores, bit-equal by the LmIndexSpec
     // round-trip). `doc_perplexity_sbo` itself stays the in-plan
     // train+score row.
-    val path = graft.operators.Dedup.storedDirRoot(spark, "graft-sbo-full",
+    val path = ArtifactCatalog.storedDirRoot(spark, "graft-sbo-full",
       dir, LmIndex.sboFingerprint)(p => LmIndex.writeSbo(spark, dir, p))
     val perDoc = LmIndex.sboNllFrom(spark, path, docs)
       .select("doc_id", "n_tokens", "n_tri", "n_big", "n_uni")
@@ -1602,19 +1602,6 @@ object TextAnalysis {
   def winnowFingerprintConf: String =
     s"k=${GraftConf.winnowK};w=${GraftConf.winnowW};fpCap=${GraftConf.winnowFpCap}"
 
-  private val WinnowMetaKey = "graft.winnow"
-
-  private[graft] def validateWinnowConf(fpd: DataFrame, what: String): Unit =
-    fpd.schema.fields.find(_.name == "fp")
-      .filter(_.metadata.contains(WinnowMetaKey))
-      .map(_.metadata.getString(WinnowMetaKey))
-      .foreach { stored =>
-        if (stored != winnowFingerprintConf) throw new IllegalStateException(
-          s"$what was built with winnow conf [$stored] but the live spark.graft.winnow.* " +
-            s"conf is [$winnowFingerprintConf]; delta fingerprints would silently miss " +
-            "the stored index — rebuild the index or align the conf")
-      }
-
   /** The persistable winnow fingerprint index: distinct (doc_id, fp),
     * conf-stamped in column metadata (survives a parquet round-trip) so
     * [[winnowContainDeltaFrom]] fails fast on conf drift — the same
@@ -1623,9 +1610,7 @@ object TextAnalysis {
   def winnowFpIndexOf(docs: DataFrame): DataFrame =
     // distinct (doc_id, fp) straight off the in-row-distinct value arrays
     // (r19) — no fingerprint-grain distinct Exchange at index-build time
-    winnowFpRows(docs).select(col("doc_id"), col("fp"))
-      .withMetadata("fp", new org.apache.spark.sql.types.MetadataBuilder()
-        .putString(WinnowMetaKey, winnowFingerprintConf).build())
+    ArtifactCatalog.WinnowStamp.stamp(winnowFpRows(docs).select(col("doc_id"), col("fp")))
 
   /** `dedup_winnow_contain_delta`: INCREMENTAL containment dedup — a new
     * crawl's docs test against the stored fingerprint index without
@@ -1636,7 +1621,7 @@ object TextAnalysis {
     val docs = Tables.documents(spark, dir)
     val isDelta = col("doc_id") % Dedup.DeltaIdMod === 0
     winnowContainDeltaFrom(
-      Dedup.storedIndex(spark, "winnowfps", dir)(
+      ArtifactCatalog.storedIndex(spark, "winnowfps", dir)(
         winnowFpIndexOf(docs.filter(!isDelta))),
       docs.filter(isDelta))
       .contractOrderBy("doc_a", "doc_b")
@@ -1658,7 +1643,7 @@ object TextAnalysis {
   private[graft] def winnowContainDeltaFrom(baseFpd0: DataFrame,
       deltaDocs: DataFrame): DataFrame = {
     val tau = GraftConf.winnowTauPct
-    validateWinnowConf(baseFpd0, "stored winnow fingerprint index")
+    ArtifactCatalog.WinnowStamp.check(baseFpd0, "stored winnow fingerprint index")
     val baseFpd = baseFpd0.select(col("doc_id"), col("fp"))
     val deltaFpd = Intermediates.persist(
       winnowFpRows(deltaDocs).select(col("doc_id"), col("fp")))
@@ -1704,7 +1689,7 @@ object TextAnalysis {
   private[graft] def winnowContainAmong(baseFpd0: DataFrame,
       ids: DataFrame): DataFrame = {
     val tau = GraftConf.winnowTauPct
-    validateWinnowConf(baseFpd0, "stored winnow fingerprint index (retract)")
+    ArtifactCatalog.WinnowStamp.check(baseFpd0, "stored winnow fingerprint index (retract)")
     val baseFpd = baseFpd0.select(col("doc_id"), col("fp"))
     val idFpd = Intermediates.persist(baseFpd.join(ids, Seq("doc_id")))
     val touched = idFpd.select("fp").distinct()
@@ -1906,28 +1891,14 @@ object TextAnalysis {
       .withColumn("h", md5(col("chunk")))
   }
 
-  private val LineMetaKey = "graft.linedd"
   private[graft] def lineFingerprintConf: String = s"chunkWords=${GraftConf.lineChunkWords}"
-
-  private[graft] def validateLineConf(idx: DataFrame, what: String): Unit =
-    idx.schema.fields.find(_.name == "h")
-      .filter(_.metadata.contains(LineMetaKey))
-      .map(_.metadata.getString(LineMetaKey))
-      .foreach { stored =>
-        if (stored != lineFingerprintConf) throw new IllegalStateException(
-          s"$what was built with line-dedup conf [$stored] but the live " +
-            s"spark.graft.linedd.* conf is [$lineFingerprintConf]; arriving units would " +
-            "silently miss the stored hashes — rebuild the index or align the conf")
-      }
 
   /** The persistable unit-hash index for crawl-time line dedup: distinct
     * unit hashes of the base corpus, conf-stamped in column metadata
     * (survives a parquet round-trip) — the [[winnowFpIndexOf]] treatment.
     */
   def lineUnitIndexOf(docs: DataFrame): DataFrame =
-    lineUnitsOf(docs).select(col("h")).distinct()
-      .withMetadata("h", new org.apache.spark.sql.types.MetadataBuilder()
-        .putString(LineMetaKey, lineFingerprintConf).build())
+    ArtifactCatalog.LineStamp.stamp(lineUnitsOf(docs).select(col("h")).distinct())
 
   def dedupLinesOf(docs: DataFrame): DataFrame =
     keepFirstUnits(lineUnitsOf(docs), " ").contractOrderBy("doc_id")
@@ -2116,7 +2087,7 @@ object TextAnalysis {
     val docs = Tables.documents(spark, dir)
     val k = GraftConf.noveltyNgram
     val mod = GraftConf.noveltyMod
-    val seen = Dedup.storedIndex(spark, s"seengrams-k$k-m$mod", dir)(
+    val seen = ArtifactCatalog.storedIndex(spark, s"seengrams-k$k-m$mod", dir)(
       seenGramsOf(docs, k, mod))
     ngramNoveltyFrom(docs, k, mod, seen)
   }

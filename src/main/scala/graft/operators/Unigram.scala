@@ -85,25 +85,25 @@ object Unigram {
   def unigramSegmentOf(docs: DataFrame): DataFrame =
     segmentWithModel(docs, unigramModelOf(docs))
 
-  /** The vocabulary's Viterbi segmentation table routed through the
-    * bench-session artifact cache when `spark.graft.bench.artifactDir`
-    * is set — "train once, segment once per corpus snapshot, PRICE
-    * many": the pricing rows (`unigram_fertility`, `tokenizer_compare`)
-    * read the stored vocab-grain table the way production prices slices
-    * against a deployed SentencePiece vocabulary, while
-    * `unigram_segment` itself stays the in-query derivation (that row
-    * IS the DP being measured). The unigram conf fingerprint rides in
-    * the artifact NAME — the shared cache path's dedup-knob salt does
-    * not cover these knobs, and a knob change must rebuild, never serve
-    * a stale inventory. Plan-only: Verify never sets the conf; parity
-    * is spec-asserted (DedupMembershipApplySpec).
+  /** Stored-index name for a vocab-grain segmentation table. The unigram
+    * conf fingerprint rides in the NAME — the stored-index path salt
+    * covers only the dedup knobs, and a knob change must rebuild, never
+    * serve a stale inventory; the raw-fingerprint hash keeps sanitized
+    * knob-sets (1.2/12 vs 12/·) from colliding.
+    */
+  private[graft] def segTableName(prefix: String): String =
+    prefix + "-" + unigramFingerprint.replaceAll("[^A-Za-z0-9]", "") +
+      "-" + ArtifactCatalog.md5Hex(unigramFingerprint).take(8)
+
+  /** The vocabulary's Viterbi segmentation table as a stored index —
+    * "train once, segment once per corpus snapshot, PRICE many": the
+    * pricing rows (`unigram_fertility`, `tokenizer_compare`) read the
+    * stored vocab-grain table the way production prices slices against a
+    * deployed SentencePiece vocabulary, while `unigram_segment` itself
+    * stays the in-query derivation (that row IS the DP being measured).
     */
   private[graft] def storedSegmentTable(spark: SparkSession, dir: String): DataFrame =
-    Dedup.storedIndex(spark,
-      // sanitizing can collide distinct knob-sets (1.2/12 vs 12/·) — append
-      // a hash of the RAW fingerprint, the benchArtifact dir-salt discipline
-      "uniseg-" + unigramFingerprint.replaceAll("[^A-Za-z0-9]", "") +
-        "-" + Dedup.md5Hex(unigramFingerprint).take(8), dir)(
+    ArtifactCatalog.storedIndex(spark, segTableName("uniseg"), dir)(
       unigramSegmentOf(Tables.documents(spark, dir)))
 
   /** The DP over an EXPLICIT (piece, lp) model — the seam
@@ -208,18 +208,13 @@ object Unigram {
   // reads the artifact.
   // ------------------------------------------------------------------
 
-  private val MetaKey = "graft.unigram"
-
   /** Every knob that changes the stored bytes. */
   def unigramFingerprint: String =
     s"maxPiece=$P;seedK=$K;maxWordLen=$L"
 
   /** Train the seed model on the corpus at `dir` and persist it. */
   def writeModel(spark: SparkSession, dir: String, path: String): Unit = {
-    val m = new org.apache.spark.sql.types.MetadataBuilder()
-      .putString(MetaKey, unigramFingerprint).build()
-    unigramModelOf(Tables.documents(spark, dir))
-      .withColumn("piece", col("piece").as("piece", m))
+    ArtifactCatalog.UnigramStamp.stamp(unigramModelOf(Tables.documents(spark, dir)))
       .write.mode("overwrite").parquet(path)
     Dedup.releaseIntermediates()
   }
@@ -241,17 +236,7 @@ object Unigram {
     */
   private[graft] def loadModel(spark: SparkSession, path: String): DataFrame = {
     val stored = spark.read.parquet(path)
-    stored.schema.fields.find(_.name == "piece")
-      .filter(_.metadata.contains(MetaKey))
-      .map(_.metadata.getString(MetaKey)) match {
-      case None => throw new IllegalStateException(
-        s"stored unigram model at $path carries no $MetaKey conf stamp — not a " +
-          "graft-written artifact; refusing to segment against it blind")
-      case Some(fp) if fp != unigramFingerprint => throw new IllegalStateException(
-        s"stored unigram model at $path was trained with [$fp] but the live conf is " +
-          s"[$unigramFingerprint]; segmentations would silently differ — retrain or align")
-      case _ => ()
-    }
+    ArtifactCatalog.UnigramStamp.check(stored, s"stored unigram model at $path")
     stored.select(col("piece"), col("lp"))
   }
 
@@ -399,14 +384,10 @@ object Unigram {
 
   /** The BASE-carve segmentation table (vocabulary trained and priced on
     * `doc_id % DeltaIdMod != 0` — the deployed inventory a standard
-    * crawl arrives against), routed through the bench-session artifact
-    * cache like [[storedSegmentTable]]. Same conf-in-name +
-    * raw-fingerprint-hash salting.
+    * crawl arrives against), stored like [[storedSegmentTable]].
     */
   private[graft] def storedBaseSegmentTable(spark: SparkSession, dir: String): DataFrame =
-    Dedup.storedIndex(spark,
-      "unisegbase-" + unigramFingerprint.replaceAll("[^A-Za-z0-9]", "") +
-        "-" + Dedup.md5Hex(unigramFingerprint).take(8), dir)(
+    ArtifactCatalog.storedIndex(spark, segTableName("unisegbase"), dir)(
       unigramSegmentOf(Tables.documents(spark, dir)
         .filter(col("doc_id") % Dedup.DeltaIdMod =!= 0)))
 

@@ -126,20 +126,6 @@ object WordPiece {
   def wordpieceSegmentFrom(spark: SparkSession, path: String, docs: DataFrame): DataFrame =
     greedyWithModel(docs, Unigram.loadModel(spark, path))
 
-  /** The greedy MaxMatch segmentation table routed through the bench-
-    * session artifact cache — the [[Unigram.storedSegmentTable]] twin
-    * for the wordpiece side of `tokenizer_compare`. Same conf-in-name
-    * salting (the greedy walk reads the same `spark.graft.unigram.*`
-    * inventory knobs).
-    */
-  private[graft] def storedGreedyTable(spark: SparkSession, dir: String): DataFrame =
-    Dedup.storedIndex(spark,
-      // raw-fingerprint hash suffix: same sanitization-collision guard as
-      // [[Unigram.storedSegmentTable]]
-      "wpseg-" + Unigram.unigramFingerprint.replaceAll("[^A-Za-z0-9]", "") +
-        "-" + Dedup.md5Hex(Unigram.unigramFingerprint).take(8), dir)(
-      wordpieceSegment(spark, dir))
-
   /** The wordpiece CTE blocks (candidates by start, greedy successor,
     * doubling rounds) — callers prepend the shared model CTEs.
     */
@@ -209,20 +195,16 @@ object WordPiece {
     */
   def tokenizerCompare(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    // pricing reads the stored vocab-grain segmentation tables when the
-    // bench artifact cache is live (train once, segment once per corpus
-    // snapshot — the Unigram.storedSegmentTable discipline); in-query the
-    // two rules share ONE persisted model so Verify trains it once
-    val (uniT, wpT) = GraftConf.benchArtifactDir match {
-      case Some(_) =>
-        (Unigram.storedSegmentTable(spark, dir), storedGreedyTable(spark, dir))
-      case None =>
-        val model = Intermediates.persist(Unigram.unigramModelOf(docs))
-        (Unigram.segmentWithModel(docs, model), greedyWithModel(docs, model))
-    }
-    val uni = uniT
+    // pricing reads the stored vocab-grain segmentation tables (train
+    // once, segment once per corpus snapshot — `uniseg` is the table
+    // Unigram.storedSegmentTable stores); built in-query, the two rules
+    // share ONE persisted model so it trains once
+    lazy val model = Intermediates.persist(Unigram.unigramModelOf(docs))
+    val uni = ArtifactCatalog.storedIndex(spark, Unigram.segTableName("uniseg"), dir)(
+        Unigram.segmentWithModel(docs, model))
       .select(col("word"), col("n_pieces").as("up"), col("segmentation").as("useg"))
-    val wp = wpT
+    val wp = ArtifactCatalog.storedIndex(spark, Unigram.segTableName("wpseg"), dir)(
+        greedyWithModel(docs, model))
       .select(col("word"), col("n_pieces").as("wp"), col("segmentation").as("wseg"))
     val tok = docs.select(col("lang"), explode(split(col("text"), " ")).as("word"))
       .filter(col("word") =!= "" && length(col("word")) <= L)

@@ -438,16 +438,14 @@ package object operators {
       n
     }
 
-    /** Bench-session artifact root (`spark.graft.bench.artifactDir`):
-      * when set, delta operators read their stored base artifacts
-      * (the unified cluster membership) from parquet pre-built ONCE
-      * under this directory instead of rebuilding them in-query, so the
-      * bench board measures the per-crawl cost model the incremental
-      * operators claim. PLAN-ONLY by construction: the artifact is the
-      * same membership table the in-query build produces (its parquet
-      * round-trip is spec-proven), so results are identical either way.
-      * Unset by default; Verify never sets it. Bench salts it per JVM so
-      * a stale artifact from an earlier session can never be read.
+    /** Session artifact-cache root (`spark.graft.bench.artifactDir`),
+      * read only by [[ArtifactCatalog]]: when set, stored indexes and
+      * directory stores build ONCE under it and every later use reads
+      * them back, so the bench board measures the per-crawl cost model
+      * the incremental operators claim. PLAN-ONLY: results are identical
+      * either way (spec-asserted). Unset by default; Verify never sets
+      * it. Bench salts it per JVM so a stale artifact from an earlier
+      * session can never be read.
       */
     def benchArtifactDir: Option[String] = {
       val v = get("spark.graft.bench.artifactDir", "")

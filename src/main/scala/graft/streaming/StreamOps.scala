@@ -5,6 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.operators.ArtifactCatalog
 
 /** Structured Streaming variants of the event operators (SURVEY §2D,
   * test-only — exercised by MemoryStream specs, not the batch oracle).
@@ -215,7 +216,7 @@ object StreamOps {
       * Call from `writeStream.foreachBatch`.
       */
     def processBatch(batchDocs: DataFrame): DataFrame = {
-      Dedup.validateBandingConf(bands, "incremental dedup index")
+      ArtifactCatalog.BandingStamp.check(bands, "incremental dedup index")
       // eager localCheckpoint cuts lineage from the micro-batch source: the
       // index must stay readable after the batch's source rows are gone
       // (production would append parquet here instead)
@@ -324,7 +325,7 @@ object StreamOps {
       * the batch's (doc_id, text) and (vec_id, embedding) projections.
       */
     def processBatch(batchDocs0: DataFrame, batchEmbs0: DataFrame): DataFrame = {
-      Dedup.validateBandingConf(ix.bands, "unified dedup index")
+      ArtifactCatalog.BandingStamp.check(ix.bands, "unified dedup index")
       // eager localCheckpoint cuts lineage from the micro-batch source
       val batchDocs = batchDocs0.localCheckpoint(true)
       val batchEmbs = batchEmbs0.localCheckpoint(true)
@@ -692,7 +693,7 @@ object StreamOps {
     */
   def winnowContainStream(docsStream: DataFrame, baseFpd: DataFrame): DataFrame = {
     import graft.operators.{GraftConf, TextAnalysis}
-    TextAnalysis.validateWinnowConf(baseFpd, "stored winnow fingerprint index")
+    ArtifactCatalog.WinnowStamp.check(baseFpd, "stored winnow fingerprint index")
     val cap = GraftConf.winnowFpCap
     val occ = baseFpd.groupBy(col("fp")).agg(count(lit(1)).as("bdf"))
       .filter(col("bdf") <= cap - 1).select("fp")
@@ -719,8 +720,8 @@ object StreamOps {
     * the index's metadata stamp.
     */
   def lineDedupStream(docsStream: DataFrame, baseUnits: DataFrame): DataFrame = {
-    import graft.operators.{GraftConf, TextAnalysis}
-    TextAnalysis.validateLineConf(baseUnits, "stored unit-hash index")
+    import graft.operators.GraftConf
+    ArtifactCatalog.LineStamp.check(baseUnits, "stored unit-hash index")
     val cw = GraftConf.lineChunkWords
     docsStream
       .withColumn("us", expr(

@@ -129,7 +129,7 @@ class DedupMembershipApplySpec extends SparkSpec {
       "tokenizer_drift_report" ->
         (graft.operators.Unigram.tokenizerDriftReport _),
       // r16 retrieval-store rows amortize the BUILD half into the cache
-      // (directory stores via storedStoreRoot) — query answers must be
+      // (directory stores via storedDirRoot) — query answers must be
       // identical against a cached store and a fresh build
       "hybrid_search_rrf_stored" ->
         (graft.operators.Similarity.hybridSearchRrfStored _),
@@ -201,6 +201,30 @@ class DedupMembershipApplySpec extends SparkSpec {
       spark.conf.unset("spark.graft.dedup.minhashTau")
       spark.conf.unset("spark.graft.dedup.cosineTau")
     }
+  }
+
+  test("artifact cache survives a failed build: nothing is published, the next call rebuilds to the in-query rows") {
+    import graft.operators.ArtifactCatalog
+    val docs = Tables.documents(spark, sf)
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+    val plain = rows(Dedup.exactHashIndexOf(docs))
+    val root = java.nio.file.Files.createTempDirectory("graft-bench-fail").toString
+    def stored(build: => DataFrame): DataFrame =
+      ArtifactCatalog.storedIndex(spark, "exact-fail", sf)(build)
+    spark.conf.set("spark.graft.bench.artifactDir", root)
+    try {
+      // the build dies on the driver before any write ...
+      intercept[IllegalStateException](stored(throw new IllegalStateException("boom")))
+      assert(new java.io.File(root).list().isEmpty, "a build that throws must leave nothing")
+      // ... and inside the write job, after other tasks may have written parts
+      val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
+      intercept[Exception](stored(Dedup.exactHashIndexOf(docs).withColumn("doc_id",
+        when(col("doc_id") === maxId, raise_error(lit("boom"))).otherwise(col("doc_id")))))
+      assert(new java.io.File(root).list().isEmpty, "a write that fails must leave nothing")
+      assert(rows(stored(Dedup.exactHashIndexOf(docs))) == plain,
+        "the next call must rebuild to the in-query rows")
+      assert(rows(stored(throw new AssertionError("a published store must not rebuild"))) == plain)
+    } finally spark.conf.unset("spark.graft.bench.artifactDir")
   }
 
   test("dedup_delta_keep_best: a higher-quality delta doc demotes the stored canonical") {

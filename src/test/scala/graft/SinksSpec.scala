@@ -119,7 +119,7 @@ class SinksSpec extends SparkSpec {
         s"bucketed index should shed the index-side Exchange: " +
           s"${exchanges(viaBucketed)} vs ${exchanges(viaComputed)}")
       // end-to-end through the real operator: the banding-conf stamp
-      // survives the catalog round-trip (validateBandingConf runs inside)
+      // survives the catalog round-trip (BandingStamp.check runs inside)
       // and the pairs are identical to the in-memory index
       val got = Dedup.dedupDeltaFrom(baseSets, spark.table("band_idx_b"), delta)
         .collect().map(_.toSeq).toSet

@@ -52,7 +52,7 @@ class SrpDeltaSpec extends SparkSpec {
         s"bucketed index should shed the index-side Exchange: " +
           s"${exchanges(viaBucketed)} vs ${exchanges(viaComputed)}")
       // end-to-end through the operator: the SRP stamp survives the catalog
-      // round-trip (validateSrpConf runs inside) and pairs are identical
+      // round-trip (SrpStamp.check runs inside) and pairs are identical
       val got = toSet(Dedup.srpDeltaFrom(base, spark.table("srp_idx_b"), delta).collect())
       Dedup.releaseIntermediates(); spark.catalog.clearCache()
       val inMem = toSet(Dedup.srpDeltaFrom(base, Dedup.srpBandRows(base), delta).collect())
