@@ -20,12 +20,18 @@ import ArtifactCatalog.AnnStamp
   * re-rank.
   *
   * Same safety contract as the stored dedup indexes: every artifact is
-  * stamped with the [[ivfPqFingerprint]] conf fingerprint (survives the
-  * parquet round-trip in column metadata), and the query path fails FAST
-  * on drift instead of silently mis-decoding codes built under different
-  * PQ geometry.
+  * stamped with its conf fingerprint (survives the parquet round-trip in
+  * column metadata), and the query path fails FAST on drift instead of
+  * silently mis-decoding codes built under different PQ geometry.
   */
 object AnnIndex {
+
+  /** Live fingerprint matching a STORED stamp's encoding flag — the
+    * catalog's way to compare a store against the live conf without
+    * knowing a priori whether it holds residual codes.
+    */
+  private[graft] def fingerprintFor(stored: String): String =
+    fingerprint(stored.contains("residual=true"))
 
   /** Every knob that changes the stored bytes: coarse-quantizer training
     * (k, iters, sample mod), PQ geometry/training (subs, k, iters), the
@@ -35,20 +41,6 @@ object AnnIndex {
     * rerank, topK) are deliberately excluded — the same index serves any
     * of them.
     */
-  def ivfPqFingerprint: String = fingerprint(residual = false)
-
-  /** The residual-store variant — keys the `ann_topk_ivfpq_r` train
-    * artifact so a raw-codebook store can never serve a residual query.
-    */
-  def ivfPqRFingerprint: String = fingerprint(residual = true)
-
-  /** Live fingerprint matching a STORED stamp's encoding flag — the
-    * catalog's way to compare a store against the live conf without
-    * knowing a priori whether it holds residual codes.
-    */
-  private[graft] def fingerprintFor(stored: String): String =
-    fingerprint(stored.contains("residual=true"))
-
   private def fingerprint(residual: Boolean): String =
     s"kmeansK=${Clustering.K};kmeansIters=${Clustering.Iters};" +
       s"trainMod=${Clustering.TrainSampleMod};pqSubs=${Clustering.PqSubs};" +
@@ -389,8 +381,8 @@ object AnnIndex {
     // build-half amortization + the applicationId salt the un-cached
     // branch carries (two concurrent sessions must never race
     // overwrite-vs-read on one store root) — [[ArtifactCatalog.storedDirRoot]]
-    val path = ArtifactCatalog.storedDirRoot(spark, "graft-ann-store", dir,
-      ivfPqFingerprint)(p => writeIvfPq(spark, dir, p))
+    val path = ArtifactCatalog.storedDirRoot(spark, "graft-ann-store", dir)(p =>
+      writeIvfPq(spark, dir, p))
     ivfPqTopK(spark, path, dir)
   }
 

@@ -18,11 +18,13 @@ import org.apache.spark.sql.types.{MetadataBuilder, StructType}
   *  - '''Catalog.''' [[scan]] is the fleet view over the same stamps;
   *    [[health]] is the fragmentation view over the same directories.
   *  - '''Cache.''' With `spark.graft.bench.artifactDir` set, stored
-  *    indexes and directory stores build once per (root, corpus dir,
-  *    name, conf) and publish through one temp-dir build, atomic rename
-  *    and `_GRAFT_STORE_OK` marker ([[storedDirRoot]]); everything else
-  *    builds in-query. Operators call [[storedIndex]] and never look at
-  *    the conf themselves.
+  *    indexes and directory stores build once per (name, corpus dir,
+  *    live `spark.graft.*` conf) and publish through one temp-dir build,
+  *    atomic rename and `_GRAFT_STORE_OK` marker ([[publish]]);
+  *    everything else builds in-query. The conf half of the key is the
+  *    whole graft conf ([[confKey]]), so no artifact lists the knobs it
+  *    depends on and a new knob can never be left out of a key. Operators
+  *    call [[storedIndex]] and never look at the conf themselves.
   */
 object ArtifactCatalog {
 
@@ -167,27 +169,7 @@ object ArtifactCatalog {
 
   // ---- session cache -----------------------------------------------------
 
-  /** Every knob whose change alters a cached single-table index's rows —
-    * the lane structural fingerprints (banding / SRP / winnow) plus the
-    * verify thresholds and caps that decide which candidate pairs survive
-    * into the membership. A knob change within a session therefore lands
-    * on a DIFFERENT store path and rebuilds, instead of silently serving
-    * a store built under the old conf (the band tables fail fast on their
-    * own stamps; membership/exact/media/sets have no stamp, so the path
-    * salt is their drift guard).
-    */
-  private def dedupConf: String = Seq(
-    Dedup.bandingFingerprint, Dedup.srpFingerprint, TextAnalysis.winnowFingerprintConf,
-    s"hotShingleDf=${GraftConf.hotShingleDf}",
-    s"minhashTau=${GraftConf.minhashTau}",
-    s"jaccardTau=${GraftConf.jaccardTau}",
-    s"cosineTau=${GraftConf.cosineTau}",
-    s"hotBandDocs=${GraftConf.hotBandDocs}",
-    s"srpHotBandDocs=${GraftConf.dedupSrpHotBandDocs}",
-    s"winnowTauPct=${GraftConf.winnowTauPct}",
-    s"verifySalts=${GraftConf.dedupVerifySalts}").mkString(";")
-
-  private[graft] def md5Hex(s: String): String =
+  private def md5Hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       .map("%02x".format(_)).mkString
@@ -201,8 +183,8 @@ object ArtifactCatalog {
     new java.io.File(sys.props.getOrElse("java.io.tmpdir", "/tmp"),
       name + "-" + safe(spark.sparkContext.applicationId) + "-" + safe(dir)).getPath
 
-  /** A stored single-table index: built once per session into the cache
-    * and read back from parquet when the cache is on; built in-query
+  /** A stored single-table index: built once per conf into the cache and
+    * read back from parquet when the cache is on; built in-query
     * otherwise (`persist` keeps the caller's intermediate persist on that
     * side). The per-lane delta operators and the unified carve share
     * names, so every consumer of one index reads ONE store. Plan-only:
@@ -212,21 +194,21 @@ object ArtifactCatalog {
       persist: Boolean = false)(build: => DataFrame): DataFrame =
     GraftConf.benchArtifactDir match {
       case Some(root) =>
-        spark.read.parquet(publish(spark, root, name, dir, dedupConf)(p =>
+        spark.read.parquet(publish(spark, root, name, dir)(p =>
           build.write.mode("overwrite").parquet(p)))
       case None => if (persist) Intermediates.persist(build) else build
     }
 
-  /** A conf-fingerprinted DIRECTORY store root (IVF-PQ, postings, SBO/NB
-    * count tables — multi-table stores the builders write themselves):
-    * published once per session when the cache is on, each store's own
-    * stamp still failing fast on drift the path salt missed. Without the
-    * cache: an unconditional build at a per-session path.
+  /** A DIRECTORY store root (IVF-PQ, postings, SBO/NB count tables —
+    * multi-table stores the builders write themselves): published once
+    * per conf when the cache is on, each store's own stamp still checked
+    * on every read. Without the cache:
+    * an unconditional build at a per-session path.
     */
   private[graft] def storedDirRoot(spark: SparkSession, name: String,
-      dir: String, fp: String)(build: String => Unit): String =
+      dir: String)(build: String => Unit): String =
     GraftConf.benchArtifactDir match {
-      case Some(root) => publish(spark, root, name, dir, fp)(build)
+      case Some(root) => publish(spark, root, name, dir)(build)
       case None =>
         val path = sessionPath(spark, name, dir)
         build(path)
@@ -241,25 +223,38 @@ object ArtifactCatalog {
     * the scratch root.
     */
   private[graft] def storedDirCopy(spark: SparkSession, name: String,
-      dir: String, fp: String)(build: String => Unit): String = {
+      dir: String)(build: String => Unit): String = {
     val scratch = sessionPath(spark, name + "-scratch", dir)
     deleteDirRec(scratch)
     GraftConf.benchArtifactDir match {
-      case Some(root) => copyDirRec(publish(spark, root, name, dir, fp)(build), scratch)
+      case Some(root) => copyDirRec(publish(spark, root, name, dir)(build), scratch)
       case None => build(scratch)
     }
     scratch
   }
 
+  /** The conf half of the cache key: every `spark.graft.*` entry of the
+    * calling session except the cache root itself, as a sorted `k=v`
+    * list. Any knob a build can read is in it, so changing one rebuilds
+    * every cached artifact (plan-only: never a different result) and
+    * restoring it reads the earlier store back.
+    */
+  private def confKey(spark: SparkSession): String =
+    spark.conf.getAll.toSeq
+      .collect { case (k, v) if k.startsWith("spark.graft.") &&
+        k != GraftConf.BenchArtifactDirKey => s"$k=$v" }
+      .sorted.mkString(";")
+
   /** The one publish: `root/<name>-<dir>-<dir hash>-<conf hash>`, complete
     * iff it holds `_GRAFT_STORE_OK`. Distinct corpus dirs never collide
     * after sanitizing (e.g. /data/x-1 vs /data/x_1) thanks to the raw-dir
-    * hash; the conf hash keys the store to the knobs it was built under.
+    * hash; the [[confKey]] hash keys the store to the conf it was built
+    * under.
     */
-  private def publish(spark: SparkSession, root: String, name: String, dir: String,
-      fp: String)(build: String => Unit): String = {
-    val path = new java.io.File(root,
-      name + "-" + safe(dir) + "-" + md5Hex(dir).take(8) + "-" + md5Hex(fp).take(12)).getPath
+  private def publish(spark: SparkSession, root: String, name: String,
+      dir: String)(build: String => Unit): String = {
+    val path = new java.io.File(root, name + "-" + safe(dir) + "-" +
+      md5Hex(dir).take(8) + "-" + md5Hex(confKey(spark)).take(12)).getPath
     val marker = new java.io.File(path, "_GRAFT_STORE_OK")
     this.synchronized {
       if (!marker.exists()) {

@@ -131,12 +131,11 @@ object Bpe {
     * artifact cache (r18) — "train once, encode many" applied to the four
     * encode-side rows (`bpe_encode`, `bpe_vocab`, `bpe_fertility`,
     * `pack_sequences_bpe`), the [[Unigram.storedSegmentTable]] discipline;
-    * `bpe_train` itself stays the in-query training row. The merge budget
-    * rides in the artifact name; Verify never sets the cache, so parity is
-    * the oracle gate itself.
+    * `bpe_train` itself stays the in-query training row; parity is the
+    * oracle gate itself.
     */
   private[graft] def storedTrainedVocab(spark: SparkSession, dir: String): DataFrame =
-    ArtifactCatalog.storedIndex(spark, s"bpevocab-m${GraftConf.bpeMerges}", dir)(
+    ArtifactCatalog.storedIndex(spark, "bpevocab", dir)(
       bpeTrainedOf(Tables.documents(spark, dir))._1)
 
   /** Unordered (doc_id, n_words, n_bpe_tokens) core — shared by

@@ -278,16 +278,14 @@ object Classify {
     // bench-session artifact: the trained trigram COUNT tables (the
     // r15 tokenizer discipline — train once per corpus snapshot, score
     // many; production deploys a trained LID model, it does not retrain
-    // per report). Conf rides in the artifact NAME (evalMod carves the
-    // train slice); Verify never sets the artifact dir, parity is
-    // spec-asserted (DedupMembershipApplySpec).
+    // per report). Parity is spec-asserted (DedupMembershipApplySpec).
     val docs = Tables.documents(spark, dir)
     val m = LangIdEvalMod
     val tokArr = expr(TrigramArrSpark)
     val train = docs.filter(col("doc_id") % m =!= 0)
-    val cw = ArtifactCatalog.storedIndex(spark, s"langidcw-m$m", dir)(
+    val cw = ArtifactCatalog.storedIndex(spark, "langidcw", dir)(
       nbCountsOf(train, tokArr)._1)
-    val cdc = ArtifactCatalog.storedIndex(spark, s"langidcdc-m$m", dir)(
+    val cdc = ArtifactCatalog.storedIndex(spark, "langidcdc", dir)(
       nbCountsOf(train, tokArr)._2)
     langIdNbFromPreds(docs, m, nbPredictionsFromCounts(docs, m, tokArr, cw, cdc))
   }
@@ -415,10 +413,8 @@ object Classify {
     * THREE rows (`quality_classifier_nb`, `qnb_calibration_report`,
     * `qnb_quarantine`) train the identical word-NB on the identical
     * planted teacher labels, so the stored counts are ONE artifact, and
-    * the timed work is the scoring path each row actually claims. Conf
-    * that changes the counts (eval carve, teacher bar) rides in the
-    * artifact NAME; Verify never sets the artifact dir — parity is the
-    * oracle gate itself, and read-back counts score bit-identically
+    * the timed work is the scoring path each row actually claims. Parity
+    * is the oracle gate itself, and read-back counts score bit-identically
     * ([[nbPredictionsFromCounts]], the stamped-counts seam NbIndex
     * already proves).
     */
@@ -427,9 +423,9 @@ object Classify {
     val m = QnbEvalMod
     val tokArr = split(col("text"), " ")
     val train = labeled.filter(col("doc_id") % m =!= 0)
-    (ArtifactCatalog.storedIndex(spark, s"qnbcw-m$m-t$QnbTauQint", dir)(
+    (ArtifactCatalog.storedIndex(spark, "qnbcw", dir)(
       nbCountsOf(train, tokArr)._1),
-      ArtifactCatalog.storedIndex(spark, s"qnbcdc-m$m-t$QnbTauQint", dir)(
+      ArtifactCatalog.storedIndex(spark, "qnbcdc", dir)(
         nbCountsOf(train, tokArr)._2))
   }
 

@@ -1073,13 +1073,10 @@ object Dedup {
     // (vec_id, cell, d2) — the Lloyd rounds are the train-once cost a
     // production SemDeDup pass amortizes across crawls; the within-cell
     // pair generation + cosine verify + CC stay in-query (that IS the
-    // dedup being measured). Kmeans conf rides in the artifact name;
-    // Verify never sets the artifact dir, parity is spec-asserted
+    // dedup being measured). Parity is spec-asserted
     // (DedupMembershipApplySpec).
     val embs = Tables.embeddings(spark, dir)
-    val assigned = storedIndex(spark,
-      s"semassigned-k${Clustering.K}-i${Clustering.Iters}-t${Clustering.TrainSampleMod}",
-      dir)(Clustering.assignedCellsOf(embs))
+    val assigned = storedIndex(spark, "semassigned", dir)(Clustering.assignedCellsOf(embs))
     dedupSemanticFrom(embs, persistIntermediate(assigned))
       .contractOrderBy("vec_id")
   }

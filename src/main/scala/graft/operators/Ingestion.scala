@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sources.Tables
+import graft.sources.{BoundedInflate, Tables}
 
 /** Corpus-scale ingestion (SURVEY §2B) — the Spark re-expression of the
   * reference's PDF ingestion stage (`ingestion/ingestion.py`).
@@ -283,35 +283,11 @@ object Ingestion {
       out.toSeq
     }
 
-    // Untrusted input: a stream needing a preset dictionary (FDICT) makes
-    // Inflater return 0 forever without being finished, and a deflate bomb
-    // can expand a few KB into GBs — both must quarantine, not hang/OOM.
-    private val MaxInflateRatio = 64L
-    private val MinInflateCap = 1L << 20
-
+    // Untrusted input: the shared bounded loop quarantines FDICT stalls
+    // and deflate bombs; a truncated stream keeps its partial output.
     private def inflate(raw: Array[Byte]): Option[Array[Byte]] =
-      try {
-        val cap = math.max(raw.length.toLong * MaxInflateRatio, MinInflateCap)
-        val inf = new java.util.zip.Inflater()
-        inf.setInput(raw)
-        val buf = new java.io.ByteArrayOutputStream(raw.length * 4)
-        val chunk = new Array[Byte](8192)
-        var stalled = false
-        var bombed = false
-        while (!inf.finished() && !stalled && !bombed) {
-          val n = inf.inflate(chunk)
-          if (n > 0) {
-            buf.write(chunk, 0, n)
-            if (buf.size().toLong > cap) bombed = true
-          } else if (inf.needsDictionary() || inf.needsInput() || n == 0) {
-            // FDICT streams and truncated input both report "no progress";
-            // either way there is nothing more we can decode.
-            stalled = true
-          }
-        }
-        inf.end()
-        if (bombed || buf.size() == 0) None else Some(buf.toByteArray)
-      } catch { case scala.util.control.NonFatal(_) => None }
+      BoundedInflate(raw, 0, raw.length, nowrap = false).toOption
+        .map(_.out).filter(_.nonEmpty)
 
     // ---- structured container parse: xref chain + /ObjStm + /Pages tree ----
 

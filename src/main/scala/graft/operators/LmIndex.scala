@@ -152,8 +152,8 @@ object LmIndex {
     // trains its LM once per corpus snapshot and scores many — the
     // timed work is the scoring joins. Uncached: app-id-salted build
     // (which also keeps concurrent sessions off one store root).
-    val path = ArtifactCatalog.storedDirRoot(spark, "graft-sbo-full",
-      dir, sboFingerprint)(p => writeSbo(spark, dir, p))
+    val path = ArtifactCatalog.storedDirRoot(spark, "graft-sbo-full", dir)(p =>
+      writeSbo(spark, dir, p))
     // sboScoreOf already applies the contract ordering
     sboNllFrom(spark, path, Tables.documents(spark, dir))
   }
@@ -176,8 +176,8 @@ object LmIndex {
     // measured op is the append merge + swap + scoring. The append
     // MUTATES, so amortized mode hands each run a fresh COPY of the
     // pristine artifact, never the shared store itself.
-    val path = ArtifactCatalog.storedDirCopy(spark, "graft-sbo-base",
-      dir, sboFingerprint)(p => writeSboDocs(docs.filter(!isD), p))
+    val path = ArtifactCatalog.storedDirCopy(spark, "graft-sbo-base", dir)(p =>
+      writeSboDocs(docs.filter(!isD), p))
     appendToSbo(spark, path, docs.filter(isD))
     sboNllFrom(spark, path, docs)
   }
@@ -194,8 +194,8 @@ object LmIndex {
     val docs = Tables.documents(spark, dir)
     // mutable copy of the SAME full-corpus pristine store
     // `doc_perplexity_sbo_stored` reads — one artifact, two consumers
-    val path = ArtifactCatalog.storedDirCopy(spark, "graft-sbo-full",
-      dir, sboFingerprint)(p => writeSbo(spark, dir, p))
+    val path = ArtifactCatalog.storedDirCopy(spark, "graft-sbo-full", dir)(p =>
+      writeSbo(spark, dir, p))
     retractFromSbo(spark, path,
       docs.filter(col("doc_id") % graft.operators.Dedup.RetractIdMod === 0))
     sboNllFrom(spark, path, docs)

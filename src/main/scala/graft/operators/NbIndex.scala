@@ -125,8 +125,8 @@ object NbIndex {
     // + swap + scoring — amortized mode hands each run a fresh COPY of
     // the pristine artifact ([[LmIndex.docPerplexitySboIncr]]'s shape);
     // uncached, the app-id salt keeps concurrent sessions off one root
-    val path = ArtifactCatalog.storedDirCopy(spark, "graft-nb-base", dir,
-      nbFingerprint("words"))(p => writeNbDocs(docs.filter(!isD), p, "words"))
+    val path = ArtifactCatalog.storedDirCopy(spark, "graft-nb-base", dir)(p =>
+      writeNbDocs(docs.filter(!isD), p, "words"))
     appendToNb(spark, path, docs.filter(isD))
     val evalDocs = docs.filter(col("doc_id") % Classify.NbEvalMod === 0)
     nbScoreFrom(spark, path, evalDocs)

@@ -664,8 +664,8 @@ object TextAnalysis {
     // uncached path builds + scores, bit-equal by the LmIndexSpec
     // round-trip). `doc_perplexity_sbo` itself stays the in-plan
     // train+score row.
-    val path = ArtifactCatalog.storedDirRoot(spark, "graft-sbo-full",
-      dir, LmIndex.sboFingerprint)(p => LmIndex.writeSbo(spark, dir, p))
+    val path = ArtifactCatalog.storedDirRoot(spark, "graft-sbo-full", dir)(p =>
+      LmIndex.writeSbo(spark, dir, p))
     val perDoc = LmIndex.sboNllFrom(spark, path, docs)
       .select("doc_id", "n_tokens", "n_tri", "n_big", "n_uni")
     docs.select(col("doc_id"), col("source"))
@@ -2081,13 +2081,12 @@ object TextAnalysis {
     // bench-session artifact: the SEEN-gram distinct table — exactly the
     // "persistable artifact" the Scaladoc above names for 100 TB (the
     // existing corpus's gram inventory is computed once, each incoming
-    // crawl prices against it). Conf (gram width, crawl carve) rides in
-    // the artifact name; Verify never sets the artifact dir, parity is
-    // spec-asserted (DedupMembershipApplySpec).
+    // crawl prices against it). Parity is spec-asserted
+    // (DedupMembershipApplySpec).
     val docs = Tables.documents(spark, dir)
     val k = GraftConf.noveltyNgram
     val mod = GraftConf.noveltyMod
-    val seen = ArtifactCatalog.storedIndex(spark, s"seengrams-k$k-m$mod", dir)(
+    val seen = ArtifactCatalog.storedIndex(spark, "seengrams", dir)(
       seenGramsOf(docs, k, mod))
     ngramNoveltyFrom(docs, k, mod, seen)
   }

@@ -85,16 +85,6 @@ object Unigram {
   def unigramSegmentOf(docs: DataFrame): DataFrame =
     segmentWithModel(docs, unigramModelOf(docs))
 
-  /** Stored-index name for a vocab-grain segmentation table. The unigram
-    * conf fingerprint rides in the NAME — the stored-index path salt
-    * covers only the dedup knobs, and a knob change must rebuild, never
-    * serve a stale inventory; the raw-fingerprint hash keeps sanitized
-    * knob-sets (1.2/12 vs 12/·) from colliding.
-    */
-  private[graft] def segTableName(prefix: String): String =
-    prefix + "-" + unigramFingerprint.replaceAll("[^A-Za-z0-9]", "") +
-      "-" + ArtifactCatalog.md5Hex(unigramFingerprint).take(8)
-
   /** The vocabulary's Viterbi segmentation table as a stored index —
     * "train once, segment once per corpus snapshot, PRICE many": the
     * pricing rows (`unigram_fertility`, `tokenizer_compare`) read the
@@ -103,7 +93,7 @@ object Unigram {
     * stays the in-query derivation (that row IS the DP being measured).
     */
   private[graft] def storedSegmentTable(spark: SparkSession, dir: String): DataFrame =
-    ArtifactCatalog.storedIndex(spark, segTableName("uniseg"), dir)(
+    ArtifactCatalog.storedIndex(spark, "uniseg", dir)(
       unigramSegmentOf(Tables.documents(spark, dir)))
 
   /** The DP over an EXPLICIT (piece, lp) model — the seam
@@ -387,7 +377,7 @@ object Unigram {
     * crawl arrives against), stored like [[storedSegmentTable]].
     */
   private[graft] def storedBaseSegmentTable(spark: SparkSession, dir: String): DataFrame =
-    ArtifactCatalog.storedIndex(spark, segTableName("unisegbase"), dir)(
+    ArtifactCatalog.storedIndex(spark, "unisegbase", dir)(
       unigramSegmentOf(Tables.documents(spark, dir)
         .filter(col("doc_id") % Dedup.DeltaIdMod =!= 0)))
 

@@ -200,10 +200,10 @@ object WordPiece {
     // Unigram.storedSegmentTable stores); built in-query, the two rules
     // share ONE persisted model so it trains once
     lazy val model = Intermediates.persist(Unigram.unigramModelOf(docs))
-    val uni = ArtifactCatalog.storedIndex(spark, Unigram.segTableName("uniseg"), dir)(
+    val uni = ArtifactCatalog.storedIndex(spark, "uniseg", dir)(
         Unigram.segmentWithModel(docs, model))
       .select(col("word"), col("n_pieces").as("up"), col("segmentation").as("useg"))
-    val wp = ArtifactCatalog.storedIndex(spark, Unigram.segTableName("wpseg"), dir)(
+    val wp = ArtifactCatalog.storedIndex(spark, "wpseg", dir)(
         greedyWithModel(docs, model))
       .select(col("word"), col("n_pieces").as("wp"), col("segmentation").as("wseg"))
     val tok = docs.select(col("lang"), explode(split(col("text"), " ")).as("word"))

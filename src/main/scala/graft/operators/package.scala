@@ -438,17 +438,20 @@ package object operators {
       n
     }
 
+    val BenchArtifactDirKey = "spark.graft.bench.artifactDir"
     /** Session artifact-cache root (`spark.graft.bench.artifactDir`),
       * read only by [[ArtifactCatalog]]: when set, stored indexes and
-      * directory stores build ONCE under it and every later use reads
-      * them back, so the bench board measures the per-crawl cost model
-      * the incremental operators claim. PLAN-ONLY: results are identical
-      * either way (spec-asserted). Unset by default; Verify never sets
-      * it. Bench salts it per JVM so a stale artifact from an earlier
-      * session can never be read.
+      * directory stores build ONCE per (name, corpus dir, live
+      * `spark.graft.*` conf minus this key) under it and every later use
+      * reads them back, so the bench board measures the per-crawl cost
+      * model the incremental operators claim. Any knob change therefore
+      * rebuilds every cached artifact. PLAN-ONLY: results are identical
+      * either way (spec-asserted). Unset by default; Verify runs without
+      * it unless its conf sets it. Bench salts it per JVM so a stale
+      * artifact from an earlier session can never be read.
       */
     def benchArtifactDir: Option[String] = {
-      val v = get("spark.graft.bench.artifactDir", "")
+      val v = get(BenchArtifactDirKey, "")
       if (v.isEmpty) None else Some(v)
     }
 

@@ -139,7 +139,11 @@ object Sinks {
   /** Run independent write thunks concurrently and propagate the first
     * failure — the multi-table store writers' shared overlap seam
     * (Spark's scheduler interleaves the jobs; FIFO back-fills each job's
-    * task tail with the next job's tasks).
+    * task tail with the next job's tasks). Each thunk runs under the
+    * caller's active session: a pooled thread otherwise keeps the one it
+    * inherited when it was spawned — possibly a clone Spark made for
+    * caching, with a stale conf — and `GraftConf` reads in the thunk
+    * (stamps, train knobs) would see that conf instead of the caller's.
     */
   private[graft] def writeAllParallel(writes: Seq[() => Unit]): Unit =
     if (writes.lengthCompare(1) <= 0) writes.foreach(_.apply())
@@ -147,7 +151,14 @@ object Sinks {
       import scala.concurrent.{Await, ExecutionContext, Future}
       import scala.concurrent.duration.Duration
       implicit val ec: ExecutionContext = ExecutionContext.global
-      Await.result(Future.traverse(writes)(w => Future(w())), Duration.Inf)
+      val caller = SparkSession.getActiveSession
+      def asCaller(w: () => Unit): Unit = {
+        val prev = SparkSession.getActiveSession
+        caller.fold(SparkSession.clearActiveSession())(SparkSession.setActiveSession)
+        try w()
+        finally prev.fold(SparkSession.clearActiveSession())(SparkSession.setActiveSession)
+      }
+      Await.result(Future.traverse(writes)(w => Future(asCaller(w))), Duration.Inf)
     }
 
   /** Heal a directory whose last [[swapIn]] crashed BETWEEN its two

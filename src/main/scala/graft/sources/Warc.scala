@@ -23,11 +23,11 @@ import org.apache.spark.sql.functions.col
   *    the middle of a segment must not cost the members after it, so the
   *    decoder resyncs to the next gzip magic (member grain) or the next
   *    `WARC/` version line (record grain) and keeps going;
-  *  - untrusted bytes ride the same inflate-bomb/stall guards as the PDF
-  *    stream decoder (graft.operators.Ingestion's FlateDecode seam): a
-  *    member claiming to expand past 64× its compressed size, or an
-  *    FDICT/truncated deflate stream that stops making progress, is
-  *    quarantined, not inflated to OOM.
+  *  - untrusted bytes ride the same inflate loop as the PDF stream
+  *    decoder ([[BoundedInflate]], also graft.operators.Ingestion's
+  *    FlateDecode seam): a member claiming to expand past 64× its
+  *    compressed size, or an FDICT/truncated deflate stream that stops
+  *    making progress, is quarantined, not inflated to OOM.
   *
   * Decoding is per-member `java.util.zip.Inflater` arithmetic (nowrap
   * after a hand-parsed RFC 1952 header) rather than `GZIPInputStream`
@@ -137,10 +137,6 @@ object Warc {
         length(col("text")).cast("long").as("n_chars"))
   }
 
-  // same untrusted-input guards as Ingestion's FlateDecode seam
-  private val MaxInflateRatio = 64L
-  private val MinInflateCap = 1L << 20
-
   /** Decode one file's bytes: split gzip members (or take the whole file
     * as one uncompressed member), parse WARC records inside each.
     */
@@ -186,7 +182,7 @@ object Warc {
   }
 
   /** Inflate ONE gzip member starting at `off`: hand-parsed RFC 1952
-    * header, nowrap Inflater with the bomb/stall caps, CRC32 + ISIZE
+    * header, [[BoundedInflate]] with its bomb/stall caps, CRC32 + ISIZE
     * trailer verification. Returns (decompressed, offset just past the
     * member's 8-byte trailer) or a quarantine reason.
     */
@@ -211,29 +207,14 @@ object Warc {
       }
       if ((flg & 2) != 0) p += 2 // FHCRC
       if (p >= b.length) return Left("truncated gzip header")
-      val compLen = b.length - p
-      val cap = math.max(compLen.toLong * MaxInflateRatio, MinInflateCap)
-      val inf = new java.util.zip.Inflater(true)
-      inf.setInput(b, p, compLen)
-      val buf = new java.io.ByteArrayOutputStream(math.min(cap, 1L << 16).toInt)
-      val chunk = new Array[Byte](8192)
-      var stalled = false
-      var bombed = false
-      while (!inf.finished() && !stalled && !bombed) {
-        val n = inf.inflate(chunk)
-        if (n > 0) {
-          buf.write(chunk, 0, n)
-          if (buf.size().toLong > cap) bombed = true
-        } else stalled = true // FDICT / truncated: no progress possible
+      val inflated = BoundedInflate(b, p, b.length - p, nowrap = true) match {
+        case Left(reason) => return Left(reason)
+        case Right(r) if !r.finished => return Left("truncated or undecodable deflate stream")
+        case Right(r) => r
       }
-      val finished = inf.finished()
-      val consumed = inf.getBytesRead.toInt
-      inf.end()
-      if (bombed) return Left("inflate cap exceeded (gzip bomb guard)")
-      if (!finished || stalled) return Left("truncated or undecodable deflate stream")
-      val trailerAt = p + consumed
+      val trailerAt = p + inflated.consumed
       if (trailerAt + 8 > b.length) return Left("truncated gzip trailer")
-      val data = buf.toByteArray
+      val data = inflated.out
       val crc = new java.util.zip.CRC32
       crc.update(data)
       if (crc.getValue != readLe32(b, trailerAt))
@@ -242,8 +223,7 @@ object Warc {
         return Left("gzip ISIZE mismatch")
       Right((data, trailerAt + 8))
     } catch {
-      // Inflater surfaces corrupt input as DataFormatException mid-stream —
-      // same quarantine class as a silent stall
+      // BoundedInflate never throws; this guards the header walk
       case scala.util.control.NonFatal(e) =>
         Left(s"truncated or undecodable deflate stream: ${e.getMessage}")
     }

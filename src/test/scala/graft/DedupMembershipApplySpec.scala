@@ -178,28 +178,77 @@ class DedupMembershipApplySpec extends SparkSpec {
   }
 
   test("artifact cache keys on the dedup conf: a knob change within a session rebuilds instead of serving stale stores") {
-    def run(): Seq[Seq[Any]] = {
-      val rows = Dedup.dedupKeepUnifiedDelta(spark, sf).collect().map(_.toSeq).toSeq
-      Dedup.releaseIntermediates()
-      rows
+    import org.apache.spark.sql.SparkSession
+    import graft.operators.{LmIndex, Similarity}
+    // one row per publish path: storedIndex (the dedup lanes + membership),
+    // storedDirRoot (the IVF-PQ train store) and storedDirCopy (the SBO
+    // base store); the last two knobs were keyed only by a per-call
+    // fingerprint before the cache keyed on the whole conf
+    val cases: Seq[(String, (SparkSession, String) => DataFrame, Seq[(String, String)])] = Seq(
+      ("dedup_keep_unified_delta", Dedup.dedupKeepUnifiedDelta _,
+        Seq("spark.graft.dedup.minhashTau" -> "0.99", "spark.graft.dedup.cosineTau" -> "0.99")),
+      ("ann_topk_ivfpq", Similarity.annTopKIvfPq _, Seq("spark.graft.kmeans.k" -> "6")),
+      ("doc_perplexity_sbo_incr", LmIndex.docPerplexitySboIncr _,
+        Seq("spark.graft.ppl.sboTrainMod" -> "3")))
+    cases.foreach { case (name, fn, knobs) =>
+      def run(): Seq[Seq[Any]] = {
+        val rows = fn(spark, sf).collect().map(_.toSeq).toSeq
+        Dedup.releaseIntermediates()
+        rows
+      }
+      val root = java.nio.file.Files.createTempDirectory("graft-bench-drift").toString
+      spark.conf.set("spark.graft.bench.artifactDir", root)
+      try {
+        val defaultConf = run() // warms the artifacts under the default conf
+        knobs.foreach { case (k, v) => spark.conf.set(k, v) }
+        val viaArtifacts = run() // must NOT read the default-conf stores
+        spark.conf.unset("spark.graft.bench.artifactDir")
+        val fresh = run() // in-query build under the same changed knobs
+        assert(viaArtifacts == fresh,
+          s"$name: knob change within a session must rebuild the cached artifacts, not serve stale ones")
+        assert(viaArtifacts != defaultConf,
+          s"$name: vacuous: the knob change must actually alter the rows for this test to prove anything")
+      } finally {
+        spark.conf.unset("spark.graft.bench.artifactDir")
+        knobs.foreach { case (k, _) => spark.conf.unset(k) }
+      }
     }
-    val root = java.nio.file.Files.createTempDirectory("graft-bench-drift").toString
+  }
+
+  test("artifact cache key tracks the whole spark.graft.* conf: same conf reads back, any knob change rebuilds, restoring it reads the first store") {
+    import graft.operators.ArtifactCatalog
+    val docs = Tables.documents(spark, sf)
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+    val plain = rows(Dedup.exactHashIndexOf(docs))
+    var builds = 0
+    def index(): DataFrame = ArtifactCatalog.storedIndex(spark, "exact-key", sf) {
+      builds += 1
+      Dedup.exactHashIndexOf(docs)
+    }
+    def dirRoot(): String = ArtifactCatalog.storedDirRoot(spark, "dir-key", sf) { p =>
+      builds += 1
+      docs.select("doc_id").write.parquet(p)
+    }
+    val root = java.nio.file.Files.createTempDirectory("graft-bench-key").toString
     spark.conf.set("spark.graft.bench.artifactDir", root)
     try {
-      val defaultConf = run() // warms the membership + lane artifacts
-      spark.conf.set("spark.graft.dedup.minhashTau", "0.99")
-      spark.conf.set("spark.graft.dedup.cosineTau", "0.99")
-      val viaArtifacts = run() // must NOT read the default-conf membership
-      spark.conf.unset("spark.graft.bench.artifactDir")
-      val fresh = run() // in-query build under the same strict knobs
-      assert(viaArtifacts == fresh,
-        "knob change within a session must rebuild the cached artifacts, not serve stale ones")
-      assert(viaArtifacts != defaultConf,
-        "vacuous: the knob change must actually alter the verdicts for this test to prove anything")
+      assert(rows(index()) == plain)
+      val first = dirRoot()
+      assert(builds == 2, "the first call of each must build")
+      assert(rows(index()) == plain && dirRoot() == first && builds == 2,
+        "the same conf must read both stores back without building")
+      // a knob outside every dedup fingerprint: no lane reads it, yet the
+      // cache cannot know which knobs a build depends on, so it rebuilds
+      spark.conf.set("spark.graft.pack.shards", "3")
+      assert(rows(index()) == plain)
+      val other = dirRoot()
+      assert(builds == 4 && other != first, "a changed knob must rebuild each store")
+      spark.conf.unset("spark.graft.pack.shards")
+      assert(rows(index()) == plain && dirRoot() == first && builds == 4,
+        "restoring the knob must read the first stores back without building")
     } finally {
       spark.conf.unset("spark.graft.bench.artifactDir")
-      spark.conf.unset("spark.graft.dedup.minhashTau")
-      spark.conf.unset("spark.graft.dedup.cosineTau")
+      spark.conf.unset("spark.graft.pack.shards")
     }
   }
 
