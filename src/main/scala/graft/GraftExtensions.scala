@@ -2,9 +2,10 @@ package graft
 
 import org.apache.spark.sql.{AnalysisException, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Cast, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-import graft.functions.{BottomK, CcLocal, DotProduct, GramHash, L2Squared, LineScore, MaxRun, Md5PrefixLong, MinOne, MisraGries, SimhashAgg, WinnowPos}
+import org.apache.spark.sql.types.DoubleType
+import graft.functions.{BottomK, CcLocal, DotProduct, GramHash, L2Squared, LineScore, MaxRun, Md5PrefixLong, MinOne, MisraGries, SimhashAgg, SrpBucketPairs, WinnowPos}
 
 /** Session extensions: registers graft's native expressions so they're
   * callable from SQL / `expr(...)` in any session built with
@@ -144,6 +145,14 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (exprs: Seq[Expression]) => {
         requireArity("graft_cc_local", 1, exprs)
         CcLocal(exprs.head)
+      }))
+    ext.injectFunction((
+      new FunctionIdentifier("graft_srp_bucket_pairs"),
+      new ExpressionInfo(classOf[SrpBucketPairs].getName, "graft_srp_bucket_pairs"),
+      (exprs: Seq[Expression]) => {
+        requireArity("graft_srp_bucket_pairs", 3, exprs)
+        // tau as double, so a SQL decimal literal (0.85) is accepted
+        SrpBucketPairs(exprs.head, exprs(1), Cast(exprs(2), DoubleType))
       }))
     ext.injectFunction((
       new FunctionIdentifier("graft_line_score"),

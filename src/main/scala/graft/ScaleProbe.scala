@@ -678,11 +678,15 @@ object ScaleProbe {
     * density. SRP applies the deployment banding rule
     * `bandBits ≈ log2(corpus / cap)` per scale (4/6/8 bits at constant 4
     * bands), so per-bucket occupancy — and with it candidate volume PER
-    * DOCUMENT — stays flat as the corpus grows; IVF applies the k ≈ √n
-    * rule. Quantizer training is part of the timed IVF run (unlike the
-    * stored MinHash index, the trained quantizer is rebuilt per corpus
-    * epoch); SRP needs no training at all — that contrast is the point of
-    * shipping both.
+    * DOCUMENT — stays flat as the corpus grows. `srp_x$k` times the lane
+    * as it runs (the bucket kernel, `srpPairsOf`, which scores each cool
+    * bucket's pairs in-row) and reports `candidates` from the probe-join
+    * reference (`srpCandidates`): the distinct pairs the kernel scores
+    * (once per band they meet in), never materialised as rows there. IVF
+    * applies the k ≈ √n rule. Quantizer training is part of the timed IVF
+    * run (unlike the stored MinHash index, the trained quantizer is
+    * rebuilt per corpus epoch); SRP needs no training at all — that
+    * contrast is the point of shipping both.
     */
   private def embeddingProbes(spark: SparkSession): Unit = {
     import graft.operators.Dedup

@@ -939,11 +939,9 @@ object Dedup {
     val e = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("label"),
         expr("transform(embedding, x -> cast(x as double))").as("emb"))
-    e.as("a").join(e.as("b"),
-        col("a.label") === col("b.label") && col("a.vec_id") < col("b.vec_id"))
-      .withColumn("cos",
-        round(expr("graft_dot(a.emb, b.emb)"), 4))
-      .filter(col("cos") >= CosineTau)
+    withCosineAtLeast(e.as("a").join(e.as("b"),
+          col("a.label") === col("b.label") && col("a.vec_id") < col("b.vec_id")),
+        expr("graft_dot(a.emb, b.emb)"), CosineTau)
       .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"),
         col("a.label").as("label"), col("cos"))
       .contractOrderBy("id_a", "id_b")
@@ -1176,12 +1174,17 @@ object Dedup {
     * it works on the very first crawl, in a streaming micro-batch, and on a
     * corpus whose distribution drifts faster than a quantizer is retrained.
     *
-    * Shape: [[SrpBits]] sign bits per vector (one projection scan:
-    * dims × bits rows into a map-side-combined sum per (vec, bit)), banded
-    * into bits/[[SrpBandBits]] bands; candidates come from a band
-    * equi-join with the [[SrpHotBandDocs]] bucket cap, then exact-cosine
-    * verify — the same ids-only-shuffle / never-n² contract as every other
-    * blocker here. The hyperplanes are integer-deterministic
+    * Shape: [[SrpBits]] sign bits per vector (one per-row projection),
+    * banded into bits/[[SrpBandBits]] bands; buckets over the
+    * [[SrpHotBandDocs]] cap are dropped by a key-only count. Each cool band
+    * row then travels WITH its embedding to its own bucket (home) and to
+    * every single-bit-flip neighbour with a higher value (visitor), one
+    * `groupBy(band_id, bucket)` gathers each bucket, and
+    * `graft_srp_bucket_pairs` scores home×home and home×visitor pairs
+    * in-row ([[srpBucketPairs]]): the cap bounds each row's work, only
+    * verified pairs leave the kernel, and no (pair, band) candidate row,
+    * candidate `distinct` or id-keyed embedding re-join is ever
+    * materialised — never n². The hyperplanes are integer-deterministic
     * ([[srpPlaneSql]]) over the exact embedding grid, so the DuckDB oracle
     * reproduces sign boundaries bit-exactly (no float sign flips).
     */
@@ -1260,9 +1263,6 @@ object Dedup {
     srpPairsOf(Tables.embeddings(spark, dir))
       .contractOrderBy("id_a", "id_b")
 
-  /** The SRP pair core over any (vec_id, embedding) relation, unordered —
-    * shared by the query surface, [[dedupKeepUnified]] and the scale probe.
-    */
   /** Multi-probe expansion (Lv et al. 2007) of (vec_id, band_id, band_val)
     * rows: each band value plus every single-bit flip of it, so a pair whose
     * band signatures differ by ≤ 1 bit is still a candidate — the recall
@@ -1281,21 +1281,33 @@ object Dedup {
         expr("case when j < 0 then band_val else band_val ^ shiftleft(1L, j) end").as("band_val"))
   }
 
-  private[graft] def srpPairsOf(embs: DataFrame): DataFrame =
-    verifyCosine(srpCandidates(embs), embs)
-
-  /** The SRP candidate id pairs before the exact-cosine verify — exposed so
-    * the scale probe can measure candidate VOLUME (the quantity the banding
-    * rule `bandBits ≈ log2(corpus/cap)` is supposed to bound) separately
-    * from verify cost.
+  /** The SRP pair core over any (vec_id, embedding) relation, unordered —
+    * shared by the query surface, [[dedupKeepUnified]] and the scale probe.
     */
-  private[graft] def srpCandidates(embs: DataFrame): DataFrame = {
-    val bands = srpBandRows(embs)
-    val cool = bands.groupBy("band_id", "band_val")
+  private[graft] def srpPairsOf(embs: DataFrame): DataFrame = {
+    val bands = srpBandRows(embs, keepEmb = true)
+    srpBucketPairs(bands.join(srpCoolKeys(bands), Seq("band_id", "band_val")))
+  }
+
+  /** The (band_id, band_val) keys of `bands` whose occupancy is within the
+    * [[SrpHotBandDocs]] cap — a count over keys only.
+    */
+  private def srpCoolKeys(bands: DataFrame): DataFrame =
+    bands.groupBy("band_id", "band_val")
       .agg(count(lit(1)).as("bdf"))
       .filter(col("bdf") <= SrpHotBandDocs)
       .select("band_id", "band_val")
-    val banded = Intermediates.persist(bands.join(cool, Seq("band_id", "band_val")))
+
+  /** The SRP candidate id pairs before the exact-cosine verify: the probe
+    * join ([[srpProbes]] × cool band rows) the bucket kernel replaces. Kept
+    * as the specification [[srpBucketPairs]] is spec'd against (with
+    * [[verifyCosine]], DedupSrpKernelSpec) and so the scale probe can
+    * measure candidate VOLUME, the quantity the banding rule
+    * `bandBits ≈ log2(corpus/cap)` is supposed to bound.
+    */
+  private[graft] def srpCandidates(embs: DataFrame): DataFrame = {
+    val bands = srpBandRows(embs)
+    val banded = Intermediates.persist(bands.join(srpCoolKeys(bands), Seq("band_id", "band_val")))
     srpProbes(banded).as("a").join(banded.as("b"),
         col("a.band_id") === col("b.band_id") && col("a.band_val") === col("b.band_val") &&
           col("a.vec_id") < col("b.vec_id"))
@@ -1303,20 +1315,65 @@ object Dedup {
       .distinct()
   }
 
+  /** The verified (id_a, id_b, cos) pairs among cool SRP band rows
+    * (band_id, band_val, vec_id, emb[, flag]) — every pair of rows whose
+    * band values differ by at most one bit in some band, scored like
+    * [[verifyCosine]] at [[CosineTau]]. A row goes to its own bucket as a
+    * home row and to each single-bit-flip neighbour with a higher value as
+    * a visitor, so each such pair meets in exactly one bucket per band; the
+    * bucket's pairs are scored in-row by `graft_srp_bucket_pairs`. With a
+    * `flag` column only pairs with a flagged endpoint are kept (the
+    * incremental lane's delta rows). Only verified pairs are deduplicated
+    * across bands.
+    */
+  private def srpBucketPairs(rows: DataFrame): DataFrame = {
+    val bandBits = SrpBandBits
+    val fields = Seq("vec_id", "emb") ++ rows.columns.find(_ == "flag")
+    rows.select(col("band_id"), col("band_val"), struct(fields.map(col): _*).as("r"),
+        explode(expr(s"filter(sequence(-1, ${bandBits - 1}), " +
+          "j -> j < 0 or (band_val & shiftleft(1L, j)) = 0)")).as("j"))
+      .select(col("band_id"),
+        expr("case when j < 0 then band_val else band_val | shiftleft(1L, j) end").as("bucket"),
+        when(col("j") < 0, col("r")).as("home"),
+        when(col("j") >= 0, col("r")).as("vis"))
+      .groupBy("band_id", "bucket")
+      .agg(collect_list(col("home")).as("home"), collect_list(col("vis")).as("vis"))
+      .select(inline(call_function("graft_srp_bucket_pairs",
+        col("home"), col("vis"), lit(CosineTau))))
+      .distinct()
+  }
+
+  /** (vec_id, emb): the embedding cast to double, the one operand form of
+    * every cosine verify.
+    */
+  private def cosineEmbOf(embs: DataFrame): DataFrame =
+    embs.select(col("vec_id"),
+      expr("transform(embedding, x -> cast(x as double))").as("emb"))
+
+  /** `df` restricted to the rows whose `round(dot, 4)` reaches `tau`, with
+    * that value as `cos`. The BigDecimal round runs only where the raw dot
+    * is ≥ tau − 1e-4: a round moves a value by at most 5e-5, so no skipped
+    * row could have passed. Spark's ordering lets a NaN dot through both
+    * filters and drops a null one at the first — the rows and values of
+    * the unguarded `round(dot, 4) >= tau`.
+    */
+  private def withCosineAtLeast(df: DataFrame, dot: Column, tau: Double): DataFrame =
+    df.filter(dot >= tau - 1e-4)
+      .withColumn("cos", round(dot, 4))
+      .filter(col("cos") >= tau)
+
   /** Exact-cosine verification of candidate id pairs against the embedding
     * relation — the embedding twin of [[verifyJaccard]] (ids-only candidate
     * shuffle; the wide vectors re-join once per side).
     */
-  private def verifyCosine(candIds: DataFrame, embs: DataFrame,
+  private[graft] def verifyCosine(candIds: DataFrame, embs: DataFrame,
       tau: Double = CosineTau): DataFrame = {
-    val e = embs.select(col("vec_id"),
-      expr("transform(embedding, x -> cast(x as double))").as("emb"))
+    val e = cosineEmbOf(embs)
     val a = verifySideJoin(candIds,
       e.select(col("vec_id").as("id_a"), col("emb").as("ea")), "id_a", "id_b")
-    verifySideJoin(a,
-      e.select(col("vec_id").as("id_b"), col("emb").as("eb")), "id_b", "id_a")
-      .withColumn("cos", round(expr("graft_dot(ea, eb)"), 4))
-      .filter(col("cos") >= tau)
+    withCosineAtLeast(verifySideJoin(a,
+        e.select(col("vec_id").as("id_b"), col("emb").as("eb")), "id_b", "id_a"),
+      expr("graft_dot(ea, eb)"), tau)
       .select("id_a", "id_b", "cos")
   }
 
@@ -1390,9 +1447,11 @@ object Dedup {
     * restricted to pairs touching a delta vector (the oracle checks exactly
     * that). Two properties make that hold with delta-sized work:
     *
-    *  - probing is symmetric ([[srpProbes]]), so delta-probes × base-bands
-    *    reaches every cross pair the full corpus would find via either
-    *    side's probe;
+    *  - probing is symmetric ([[srpProbes]]): a delta row and a base row
+    *    whose band values differ by at most one bit sit in each other's
+    *    probe sets, so every delta-touching pair lies inside the touched
+    *    buckets, and the bucket kernel ([[srpBucketPairs]]) scores it with
+    *    the delta rows flagged (pairs of two base rows are dropped);
     *  - only buckets in the delta's PROBE set (its band values + their
     *    single-bit flips) can host a delta-touching candidate, and both
     *    endpoints' occupancy buckets lie in that set — so the stored index
@@ -1405,31 +1464,19 @@ object Dedup {
   def srpDeltaFrom(baseEmb: DataFrame, baseBands: DataFrame,
       deltaEmb: DataFrame): DataFrame = {
     SrpStamp.check(baseBands, "stored SRP band index")
-    val deltaBands = persistIntermediate(srpBandRows(deltaEmb))
+    val deltaBands = persistIntermediate(srpBandRows(deltaEmb, keepEmb = true))
+    val keys = Seq("band_id", "band_val")
     val touched = srpProbes(deltaBands).select("band_id", "band_val").distinct()
-    val baseTouched = persistIntermediate(
-      baseBands.join(touched, Seq("band_id", "band_val")))
+    val baseTouched = persistIntermediate(baseBands.join(touched, keys))
     // full-corpus bucket occupancy without re-projecting base vectors:
     // stored index count + delta count (probe-touched buckets only)
-    val cool = baseTouched.select("band_id", "band_val")
-      .unionByName(deltaBands.select("band_id", "band_val"))
-      .groupBy(col("band_id"), col("band_val"))
-      .agg(count(lit(1)).as("bdf"))
-      .filter(col("bdf") <= SrpHotBandDocs)
-      .select("band_id", "band_val")
-    val b = baseTouched.join(cool, Seq("band_id", "band_val"))
-    val d = persistIntermediate(deltaBands.join(cool, Seq("band_id", "band_val")))
-    val probes = srpProbes(d)
-    val deltaBase = probes.as("a").join(b.as("b"),
-        col("a.band_id") === col("b.band_id") && col("a.band_val") === col("b.band_val"))
-      .select(least(col("a.vec_id"), col("b.vec_id")).as("id_a"),
-        greatest(col("a.vec_id"), col("b.vec_id")).as("id_b"))
-    val deltaDelta = probes.as("a").join(d.as("b"),
-        col("a.band_id") === col("b.band_id") && col("a.band_val") === col("b.band_val") &&
-          col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"))
-    val cand = deltaBase.unionByName(deltaDelta).distinct()
-    verifyCosine(cand, baseEmb.unionByName(deltaEmb))
+    val cool = srpCoolKeys(baseTouched.select("band_id", "band_val")
+      .unionByName(deltaBands.select("band_id", "band_val")))
+    val b = baseTouched.join(cool, keys)
+      .join(cosineEmbOf(baseEmb), Seq("vec_id"))
+      .withColumn("flag", lit(false))
+    val d = deltaBands.join(cool, keys).withColumn("flag", lit(true))
+    srpBucketPairs(b.unionByName(d))
       .contractOrderBy("id_a", "id_b")
   }
 
@@ -1760,8 +1807,9 @@ object Dedup {
     * `dedup_keep_best` all cluster over this one pair graph ("detect
     * once, act many" — production persists the detect row's output and
     * every act step reads it; `dedup_minhash_lsh` itself stays the
-    * in-query detection being measured). Plan-only: Verify never sets
-    * the conf, parity is the oracle gate per row.
+    * in-query detection being measured). Plan-only: the default Verify
+    * posture leaves the cache off and the verify finals' cache-on pass
+    * turns it on; parity is the oracle gate per row in both.
     */
   private def storedMinhashPairs(spark: SparkSession, dir: String): DataFrame =
     storedIndex(spark, "mhpairs", dir)(
@@ -2093,7 +2141,8 @@ object Dedup {
     * board pays the five-lane derivation once per session instead of
     * once per row — the cost model production actually has (the lane
     * artifact is derived once per corpus version and every consumer
-    * reads it). Plan-only: Verify never sets the conf, and the
+    * reads it). Plan-only: the default Verify posture leaves the cache
+    * off and the verify finals' cache-on pass turns it on; the
     * amortized-vs-in-query parity is spec-asserted per consumer.
     */
   private[graft] def storedTaggedPairs(spark: SparkSession, dir: String): DataFrame =
@@ -2861,20 +2910,11 @@ object Dedup {
     SrpStamp.check(ix.srpBands, "stored SRP band index (retract)")
     val vids = ids.select(col("doc_id").as("vec_id"))
     val idSrp = ix.srpBands.join(vids, Seq("vec_id"))
-    val srpKeys = idSrp.select("band_id", "band_val").distinct()
-    val srpCool = ix.srpBands.join(srpKeys, Seq("band_id", "band_val"))
-      .groupBy(col("band_id"), col("band_val"))
-      .agg(count(lit(1)).as("bdf"))
-      .filter(col("bdf") <= SrpHotBandDocs)
-      .select("band_id", "band_val")
-    val srpRows = persistIntermediate(idSrp.join(srpCool, Seq("band_id", "band_val")))
-    val srpCands = srpProbes(srpRows).as("a").join(srpRows.as("b"),
-        col("a.band_id") === col("b.band_id") &&
-          col("a.band_val") === col("b.band_val") &&
-          col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"))
-      .distinct()
-    val srp = verifyCosine(srpCands, ix.embs)
+    val srpKeys = Seq("band_id", "band_val")
+    val srpCool = srpCoolKeys(ix.srpBands.join(
+      idSrp.select("band_id", "band_val").distinct(), srpKeys))
+    val srp = srpBucketPairs(idSrp.join(srpCool, srpKeys)
+        .join(cosineEmbOf(ix.embs), Seq("vec_id")))
       .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
 
     val wn = TextAnalysis.winnowContainAmong(ix.winnowFps, ids)

@@ -792,9 +792,11 @@ object Similarity {
     // bench-session amortization of the TRAIN half (coarse centroids +
     // residual codebooks) through the directory-store cache — the same
     // discipline as the three r16 retrieval stores, applied to the last
-    // retrieval row that still trained in-query. Verify never sets the
-    // cache → tmp-root unconditional build; answers are bit-equal either
-    // way (trained tables round-trip exactly; parity spec-asserted).
+    // retrieval row that still trained in-query. With the cache off (the
+    // default Verify posture) → tmp-root unconditional build; the verify
+    // finals' cache-on pass reads the store back. Answers are bit-equal
+    // either way (trained tables round-trip exactly; parity spec-asserted
+    // and oracle-checked in both postures).
     val path = ArtifactCatalog.storedDirRoot(spark, "graft-ivfpqr-train", dir)(p =>
       AnnIndex.writeIvfPqRTrain(spark, dir, p))
     // NOT Intermediates.persist'd: the stored-table query paths broadcast
@@ -1203,8 +1205,9 @@ object Similarity {
     // its retrieval stores once per corpus snapshot and queries many
     // times — with the artifact cache on, the conf-keyed store
     // root persists across rows/reps and the timed work is the QUERY
-    // path (probed cells + pruned postings row groups). Verify never
-    // sets the cache → build+query, parity spec-asserted.
+    // path (probed cells + pruned postings row groups). With the cache
+    // off (the default Verify posture) → build+query; the verify finals'
+    // cache-on pass checks the stored path. Parity spec-asserted.
     val path = ArtifactCatalog.storedDirRoot(spark, "graft-hybrid-store", dir) { p =>
       AnnIndex.writeIvfPq(spark, dir, s"$p/ivfpq")
       PostingsIndex.writePostings(spark, dir, s"$p/lex")

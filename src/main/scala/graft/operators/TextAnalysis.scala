@@ -660,8 +660,9 @@ object TextAnalysis {
     // the coverage dashboard is a monitoring READ against the deployed LM:
     // score from the same stored full-corpus SBO model
     // `doc_perplexity_sbo_stored` reads (one artifact, two consumers —
-    // bench-session amortized; Verify never sets the cache and the
-    // uncached path builds + scores, bit-equal by the LmIndexSpec
+    // bench-session amortized; with the cache off, the default Verify
+    // posture, the uncached path builds + scores, and the verify finals'
+    // cache-on pass checks the stored path — bit-equal by the LmIndexSpec
     // round-trip). `doc_perplexity_sbo` itself stays the in-plan
     // train+score row.
     val path = ArtifactCatalog.storedDirRoot(spark, "graft-sbo-full", dir)(p =>

@@ -177,8 +177,12 @@ package object operators {
       * in ~10⁴ candidate pairs, all hashing to one reducer); salts > 1
       * routes a hot doc's pairs across `salts` reducers via
       * [[Skew.saltedJoin]], replicating only the narrow per-doc sets
-      * relation. Plan-only: results are identical at any value
-      * (spec-asserted), so the oracle SQL never sees it.
+      * relation. It salts the MinHash lanes' Jaccard verify (batch, delta
+      * and retract, and the similarity counts) and the cosine verify of the
+      * trained-IVF and SemDeDup lanes. The SRP lane has no id-keyed re-join
+      * to salt: it scores pairs inside each capped bucket. Plan-only:
+      * results are identical at any value (spec-asserted), so the oracle
+      * SQL never sees it.
       */
     def dedupVerifySalts: Int = positive("spark.graft.dedup.verifySalts", "1")
     /** SRP hot-bucket cap (`spark.graft.dedup.srpHotBandDocs`) — separate

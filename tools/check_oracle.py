@@ -2,6 +2,7 @@
 """Local oracle-parity harness (mimics the driver's t2 check).
 
 Usage: python3 tools/check_oracle.py <verify_out_dir> <sf_dir> [json_out]
+           [--memory-limit 4GB] [--threads 2] [--temp-directory DIR]
 
 With json_out (e.g. target/correctness.json) also writes a per-query
 pass/fail JSON artifact — the belt-and-braces copy committed at round end
@@ -10,8 +11,13 @@ so a missing driver artifact never leaves a round unadjudicated.
 Reads each <out>/<name> parquet written by graft.Verify, runs the matching
 oracle SQL from <out>/oracle_sql.json in DuckDB over the sf parquet tables,
 and compares row counts, sorted-column schemas, and value hashes.
+
+The optional flags set DuckDB's `memory_limit`, `threads` and
+`temp_directory` (defaults: DuckDB's own, i.e. 80% of RAM and every core);
+a capped limit with a temp directory lets the heavier dedup oracles spill
+instead of taking a shared host's memory.
 """
-import json, sys, hashlib
+import argparse, json, sys, hashlib
 from pathlib import Path
 
 import duckdb
@@ -31,10 +37,26 @@ def canon(table: pa.Table):
     return len(pydata), cols, h, rows
 
 
+def parse_args():
+    ap = argparse.ArgumentParser(description="DuckDB oracle parity for graft.Verify output")
+    ap.add_argument("out_dir", help="graft.Verify output directory")
+    ap.add_argument("sf_dir", help="directory of the sf parquet tables")
+    ap.add_argument("json_out", nargs="?", help="also write per-query pass/fail JSON here")
+    ap.add_argument("--memory-limit", help="DuckDB memory_limit, e.g. 4GB")
+    ap.add_argument("--threads", type=int, help="DuckDB threads")
+    ap.add_argument("--temp-directory", help="DuckDB temp_directory for spilling")
+    return ap.parse_args()
+
+
 def main():
-    out_dir, sf_dir = Path(sys.argv[1]), sys.argv[2]
+    args = parse_args()
+    out_dir, sf_dir = Path(args.out_dir), args.sf_dir
     oracle = json.loads((out_dir / "oracle_sql.json").read_text())
-    con = duckdb.connect()
+    config = {k: v for k, v in (("memory_limit", args.memory_limit),
+                                ("threads", args.threads),
+                                ("temp_directory", args.temp_directory))
+              if v is not None}
+    con = duckdb.connect(config=config)
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
     n_pass = n_fail = 0
@@ -72,8 +94,8 @@ def main():
             print(f"FAIL {name}: {type(e).__name__}: {e}"); n_fail += 1
             record(name, False, f"{type(e).__name__}: {e}")
     print(f"\n{n_pass} pass, {n_fail} fail")
-    if len(sys.argv) > 3:
-        out = Path(sys.argv[3])
+    if args.json_out:
+        out = Path(args.json_out)
         out.parent.mkdir(parents=True, exist_ok=True)
         # provenance stamp: the SHA + timestamp this run adjudicated, so a
         # committed self-artifact is provably from the code it sits next to
