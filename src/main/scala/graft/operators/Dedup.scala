@@ -1091,12 +1091,9 @@ object Dedup {
       .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
     // CC over the within-cell ε-graph = the SemDeDup duplicate groups;
     // re-rank each group by the paper's keep rule (max d2, ties to id).
-    // Per-CELL in-row closure (r19): every edge joins two vectors of ONE
-    // cell (argmin assignment is unique), so components cannot cross
-    // cells — the keyed graft_cc_local path closes each cell in-row and
-    // the global pointer-jump loop (one label-sum job per round) never
-    // runs; cells above the ccLocalMaxEdges cap fall back to it.
-    val member = clustersFromPairsKeyed(pairs.join(
+    // Every edge joins two vectors of ONE cell (argmin assignment is
+    // unique), so the cell is a closed CC group.
+    val member = clustersFromPairs(pairs.join(
         assigned.select(col("vec_id").as("doc_a"), col("cell").as("cc_grp")),
         Seq("doc_a")))
       .select(col("doc_id").as("vec_id"), col("cluster_id").as("group_id"),
@@ -1815,31 +1812,45 @@ object Dedup {
     storedIndex(spark, "mhpairs", dir)(
       minhashPairsOf(Tables.documents(spark, dir)).select("doc_a", "doc_b"))
 
-  /** Connected components over ANY (doc_a, doc_b) pair relation →
-    * (doc_id, cluster_id, cluster_size, is_canonical) — the CC core shared
-    * by the MinHash-only cluster path and the unified multi-lane path.
+  /** Connected components over a (doc_a, doc_b[, cc_grp]) pair relation →
+    * (doc_id, cluster_id, cluster_size, is_canonical) with min-id labels —
+    * the one CC entry point of every dedup act row.
     *
-    * In-row fast path (r19, guide §2.6): when the WHOLE edge set fits the
-    * [[GraftConf.ccLocalMaxEdges]] cap, the closure is one count probe +
-    * one single-partition aggregation through the exact `graft_cc_local`
-    * union-find, instead of the pointer-jump loop — the loop costs one
-    * label-sum JOB per round and the unified edge sets measured 6–12
-    * rounds of ~0.25 s pure scheduling overhead each at sf0.1. At real
-    * scale the near-dup edge set outgrows the cap (~24 B/edge in one
-    * task) and the loop runs exactly as before. Both paths are exact CC
-    * with min-id labels; ClustersFromPairsSpec asserts them equal and
-    * tools/knob_sweep.sh sweeps cap=1 so the oracle gate exercises the
-    * loop on every consuming row.
+    * `cc_grp` is optional and must be CLOSED: no edge crosses groups
+    * (retract's old cluster ids, SemDeDup's k-means cells), so the union of
+    * the per-group labelings is the global labeling. Without it the whole
+    * relation is one group. Routing happens inside the plan: a group with
+    * at most [[GraftConf.ccLocalMaxEdges]] edges closes in-row through the
+    * exact `graft_cc_local` union-find; the edges of larger groups go to
+    * the distributed pointer-jump loop, so an over-cap group is never
+    * gathered into one row. The router reads no job's result back to the
+    * driver to pick a path: the split is in the plan. Taking the `routed`
+    * checkpoint below runs its group-size stages once (AQE executes a
+    * plan's exchanges when it is checkpointed); the loop's first label
+    * job, which the loop runs anyway, materializes it and finds whether
+    * any over-cap edge exists, and the final action reads it for the
+    * in-row side. Both paths are exact CC; ClustersFromPairsSpec asserts
+    * them equal, and tools/knob_sweep.sh runs cap 1, which puts every
+    * caller on the loop.
     */
   private[graft] def clustersFromPairs(pairs: DataFrame): DataFrame = {
-    // lazy localCheckpoint: the count probe below is the materializing
-    // action, the closure plan (either path) then reads the checkpointed
-    // RDD instead of re-deriving the (possibly five-lane-deep) pair
-    // lineage
-    val p = pairs.localCheckpoint(false)
-    if (p.count() <= GraftConf.ccLocalMaxEdges)
-      ccLocalOf(p.agg(collect_list(struct(col("doc_a"), col("doc_b"))).as("es")))
-    else clustersFromPairsGuardedLoop(p)
+    val grp = if (pairs.columns.contains("cc_grp")) Seq("cc_grp") else Nil
+    // lazy localCheckpoints, not persist: both sides read `routed` — a
+    // persist would embed the (possibly five-lane-deep) pair lineage once
+    // per reader in the final plan, the checkpoint truncates it to one RDD
+    // scan. The group sizes (one row per group) are broadcast so no group's
+    // edges are ever shuffled together just to learn its size.
+    val tagged = pairs.select((Seq("doc_a", "doc_b") ++ grp).map(col): _*)
+      .localCheckpoint(false)
+    val routed = tagged
+      .join(broadcast(tagged.groupBy(grp.map(col): _*).agg(count(lit(1)).as("n_edges"))), grp)
+      .withColumn("in_row", col("n_edges") <= GraftConf.ccLocalMaxEdges)
+      .localCheckpoint(false)
+    val inRow = ccLocalOf(routed.filter(col("in_row"))
+      .groupBy(grp.map(col): _*)
+      .agg(collect_list(struct(col("doc_a"), col("doc_b"))).as("es")))
+    inRow.unionByName(clustersFromPairsGuardedLoop(
+      routed.filter(!col("in_row")).select("doc_a", "doc_b")))
   }
 
   /** Explode one `es` edge-array column through `graft_cc_local` into the
@@ -1852,44 +1863,8 @@ object Dedup {
         col("r.cluster_size").as("cluster_size"),
         (col("r.doc_id") === col("r.cluster_id")).as("is_canonical"))
 
-  /** Per-GROUP in-row closure over a (doc_a, doc_b, cc_grp) edge relation
-    * whose pair relation is CLOSED under `cc_grp` (no edge crosses
-    * groups — retract's old cluster ids, SemDeDup's k-means cells): each
-    * at-or-under-cap group closes in-row via `graft_cc_local`; oversized
-    * groups fall back to the distributed loop. Exact CC either way —
-    * group-closedness makes the per-group union of labelings equal the
-    * global labeling.
-    */
-  private[graft] def clustersFromPairsKeyed(tagged0: DataFrame): DataFrame = {
-    // lazy localCheckpoint, not persist: `tagged` is read by three
-    // consumers (the cap routing, the in-row groupBy, the loop fallback) —
-    // a persist would embed the full pair lineage three times over in the
-    // final plan, while the checkpoint truncates it to one RDD scan. The
-    // isEmpty probe below is the materializing action either way.
-    val tagged = tagged0.localCheckpoint(false)
-    val cap = GraftConf.ccLocalMaxEdges
-    val eligible = tagged.groupBy(col("cc_grp"))
-      .agg(count(lit(1)).as("n_edges"))
-      .filter(col("n_edges") <= cap)
-      .select("cc_grp")
-    val inRow = ccLocalOf(tagged.join(eligible, Seq("cc_grp"))
-      .groupBy(col("cc_grp"))
-      .agg(collect_list(struct(col("doc_a"), col("doc_b"))).as("es")))
-    val bigPairs = tagged.join(eligible, Seq("cc_grp"), "left_anti")
-      .select("doc_a", "doc_b")
-    // the loop costs two label-sum jobs even on zero edges — skip it unless
-    // an oversized group exists (the isEmpty probe materializes the
-    // checkpoint once; the final action reuses it). bigPairs is the edges
-    // of groups that each exceed the cap, so it can never take the global
-    // in-row path — route straight to the loop.
-    if (bigPairs.isEmpty) inRow
-    else inRow.unionByName(clustersFromPairsGuardedLoop(bigPairs)
-      .select("doc_id", "cluster_id", "cluster_size", "is_canonical"))
-  }
-
   /** The distributed pointer-jump loop with its constraint-propagation
-    * conf guard — the exact-CC fallback both in-row paths route oversized
-    * edge sets to.
+    * conf guard — where [[clustersFromPairs]] sends over-cap groups.
     */
   private def clustersFromPairsGuardedLoop(pairs: DataFrame): DataFrame = {
     // Catalyst's union-constraint rewrite (UnionBase.rewriteConstraints)
@@ -1935,26 +1910,25 @@ object Dedup {
     // inline, not self-union: one scan emits both edge directions, and it
     // sidesteps Catalyst's union-constraint rewrite, which throws on the
     // shared-subplan attribute ids when `pairs` is a local relation
-    // (planted spec corpora; SPARK-behaviour observed on 4.1)
-    val edges = persistIntermediate(
-      pairs.selectExpr(
-        """inline(array(named_struct('src', doc_a, 'dst', doc_b),
-          |             named_struct('src', doc_b, 'dst', doc_a)))""".stripMargin))
+    // (planted spec corpora; SPARK-behaviour observed on 4.1). Not
+    // persisted: `pairs` reads the router's checkpoint, so each round's
+    // re-derivation is one in-memory scan, and a cached copy would cost a
+    // job of its own under AQE.
+    val edges = pairs.selectExpr(
+      """inline(array(named_struct('src', doc_a, 'dst', doc_b),
+        |             named_struct('src', doc_b, 'dst', doc_a)))""".stripMargin)
     // round-0 labels = min over self + direct neighborhood (not just self):
     // near-dup components are mostly CLIQUES (every pair similar), which
     // this initialization already labels correctly — the loop then runs a
     // single confirming round instead of two propagation rounds.
     //
-    // Each round's label table is EAGERLY localCheckpoint-ed: iterative
+    // Each round's label table is localCheckpoint-ed: iterative
     // lineage otherwise nests the whole previous round's plan per round
     // (exponential recompute if a cached block is ever evicted, and a plan
     // tree that grows without bound). Production on a real cluster would
     // use reliable `checkpoint()` to survive executor loss; the truncation
-    // point is the same.
-    // localCheckpoint is LAZY here: the convergence action right below is
-    // the first action on each round's labels, so it both materializes the
-    // checkpoint and reads the sum in ONE job per round (eager + separate
-    // sum was two).
+    // point is the same. The checkpoint is LAZY: the label-sum job below
+    // is the first action on each round's labels and materializes it.
     var labels =
       edges.selectExpr(
           """inline(array(named_struct('id', dst, 'comp', src),
@@ -1963,11 +1937,16 @@ object Dedup {
         .localCheckpoint(false)
     // Convergence test without an extra join-and-count job: labels only ever
     // DECREASE under min-propagation over a fixed node set, so sum(comp) is
-    // strictly monotone until the fixpoint — one single-row action per round.
-    // coalesce: sum over an EMPTY label table (corpus with no near-dup
-    // pairs at all) is NULL, not 0
-    def labelSum(df: DataFrame): Long =
-      df.agg(coalesce(sum(col("comp")), lit(0L))).head().getLong(0)
+    // strictly monotone until the fixpoint. One single-stage RDD job per
+    // round (a DataFrame agg is two under AQE: its exchange stage and the
+    // result). The sum is an exact BigInt: labels are doc ids of up to 63
+    // bits (the WARC bridge's md5 ids), and a bigint sum overflows — ANSI
+    // raises — once a few of them add up. The round-0 job also counts the
+    // nodes: none means no over-cap edge reached the loop.
+    def labelSum(df: DataFrame): (BigInt, Long) =
+      df.select(col("comp")).rdd.aggregate((BigInt(0), 0L))(
+        (acc, r) => (acc._1 + r.getLong(0), acc._2 + 1L),
+        (x, y) => (x._1 + y._1, x._2 + y._2))
     // pointer jump (path doubling): adopt the label OF the label — comp(v)
     // is itself a node id, so a self-join on the (small) label table
     // compresses paths geometrically and convergence is O(log diameter)
@@ -1981,10 +1960,11 @@ object Dedup {
           col("l.comp") === col("p.jid"), "left_outer")
         .select(col("l.id").as("id"),
           least(col("l.comp"), coalesce(col("jcomp"), col("l.comp"))).as("comp"))
-    var prevSum = labelSum(labels)
+    val (sum0, nodes) = labelSum(labels)
+    var prevSum = sum0
     var converged = false
     var iter = 0
-    while (!converged && iter < CcMaxIters) {
+    while (nodes > 0L && !converged && iter < CcMaxIters) {
       val prop = edges.join(labels, edges("src") === labels("id"))
         .select(col("dst").as("id"), col("comp"))
       val viaEdges = labels.select("id", "comp").union(prop)
@@ -1994,14 +1974,16 @@ object Dedup {
       // tried (the label table is small; per-round joins, not depth,
       // dominate)
       val next = jump(viaEdges).localCheckpoint(false)
-      val nextSum = labelSum(next)
+      val nextSum = labelSum(next)._1
       converged = nextSum == prevSum
       prevSum = nextSum
       labels = next
       iter += 1
     }
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("cluster_id"))
-    labels
+    // no nodes: limit 0 folds to an empty relation at optimization, so the
+    // router's final plan drops the loop side instead of scanning it
+    (if (nodes > 0L) labels else labels.limit(0))
       .select(col("id").as("doc_id"), col("comp").as("cluster_id"))
       .withColumn("cluster_size", count(lit(1)).over(w))
       .withColumn("is_canonical", col("doc_id") === col("cluster_id"))
@@ -2616,12 +2598,8 @@ object Dedup {
       .select(coalesce(col("ca"), col("doc_a")).as("doc_a"),
         coalesce(col("cb"), col("doc_b")).as("doc_b"))
       .filter(col("doc_a") =!= col("doc_b"))
-      // localCheckpoint (the CC discipline — contracted is delta-sized):
-      // also truncates the join/coalesce constraint chain, which Catalyst's
-      // union-constraint rewrite otherwise trips over inside the CC
-      // self-unions when the inputs are local relations
-      .localCheckpoint(true)
-    // CC on the contracted graph: delta-sized, the same pointer-jump core
+    // CC on the contracted graph: delta-sized; the router's checkpoint of
+    // its input truncates the join/coalesce constraint chain
     val nodeLabels = clustersFromPairs(contracted)
       .select(col("doc_id").as("node"), col("cluster_id").as("final_id"))
       .localCheckpoint(true)
@@ -2844,18 +2822,12 @@ object Dedup {
     val survivors = stored.join(touched, Seq("cluster_id"))
       .join(s, Seq("doc_id"), "left_anti").select("doc_id")
     val untouched = stored.join(touched, Seq("cluster_id"), "left_anti")
-    // Re-closure PER OLD CLUSTER (r19): survivor pairs cannot cross stored
+    // Re-closure per old cluster: survivor pairs cannot cross stored
     // components (the survivor pair relation is the stored pair relation
     // restricted to survivors, and CC components are closed under it), so
-    // instead of the global pointer-jump loop — which burned one label-sum
-    // job per round, 9 rounds of pure scheduling overhead on this carve —
-    // the edges group by their old cluster id and each group closes in-row
-    // via the exact union-find expression graft_cc_local. Groups above the
-    // ccLocalMaxEdges memory cap (a mega-cluster a takedown grazes) fall
-    // back to the distributed loop; both paths are exact CC with min-id
-    // labels and DedupMembershipRetractSpec asserts them equal.
+    // the old cluster id is a closed CC group.
     val pairs = unifiedPairsAmong(ix, survivors)
-    val recomputed = clustersFromPairsKeyed(pairs.join(
+    val recomputed = clustersFromPairs(pairs.join(
       stored.select(col("doc_id").as("doc_a"), col("cluster_id").as("cc_grp")),
       Seq("doc_a")))
     untouched.select("doc_id", "cluster_id", "cluster_size", "is_canonical")

@@ -83,15 +83,12 @@ object WordPiece {
       .localCheckpoint(true)
     // pointer doubling: after round k every fragment either ends at the
     // word boundary or spans >= 2^k pieces (hence >= 2^k chars), so
-    // ceil(log2(maxLen)) rounds finish every walk from pos 0. Each round's
-    // frame is eagerly localCheckpoint-ed — the self-join would otherwise
-    // double the logical plan per round (the Unigram/Bpe discipline).
-    // Empty vocabulary aggregates to NULL — read nullable and fall to 0
-    // so the walk degrades to the empty contract-shaped frame, not an NPE.
-    val maxLen = math.min(L,
-      Option(vw.agg(max(length(col("word")))).head().get(0))
-        .map(_.asInstanceOf[Int]).getOrElse(0))
-    val rounds = 32 - Integer.numberOfLeadingZeros(math.max(maxLen - 1, 1))
+    // ceil(log2(L)) rounds finish every walk from pos 0 — vocabOf keeps
+    // only words of at most L chars, and a round after every walk is
+    // complete leaves `frag` unchanged. Each round's frame is eagerly
+    // localCheckpoint-ed — the self-join would otherwise double the
+    // logical plan per round (the Unigram/Bpe discipline).
+    val rounds = 32 - Integer.numberOfLeadingZeros(math.max(L - 1, 1))
     for (_ <- 1 to rounds) {
       val fin = frag.filter(col("nxt") >= length(col("word")))
       val comp = frag.filter(col("nxt") < length(col("word"))).as("a")

@@ -137,10 +137,10 @@ package object operators {
       */
     def ccMaxIters: Int = positive("spark.graft.dedup.ccMaxIters", "20")
     /** Per-group in-row CC edge cap (`spark.graft.dedup.ccLocalMaxEdges`):
-      * retract's re-closure runs per OLD cluster (survivor pairs cannot
-      * cross stored components), in-row via `graft_cc_local` when the
-      * cluster's surviving edge count is at or under this cap; bigger
-      * groups — a mega-cluster a takedown grazes — fall back to the
+      * `Dedup.clustersFromPairs` closes each group (a `cc_grp` value —
+      * retract's old cluster, a SemDeDup cell — or the whole pair set)
+      * in-row via `graft_cc_local` when its edge count is at or under this
+      * cap; bigger groups — a mega-cluster a takedown grazes — go to the
       * distributed pointer-jump loop. The cap bounds per-row memory
       * (~24 B/edge: 2^20 edges ≈ 24 MB, well inside a task), not
       * correctness — both paths are exact CC and spec-asserted equal.

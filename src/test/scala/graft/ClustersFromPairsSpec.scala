@@ -1,73 +1,68 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
 
-/** The r19 CC fast paths: `clustersFromPairs`'s whole-set in-row closure
-  * and `clustersFromPairsKeyed`'s per-group closure must both equal the
-  * distributed pointer-jump loop bit-for-bit — same labels, same sizes,
-  * same canonicals — on graphs with chains (where min-id must propagate
-  * across many hops), cliques, singleton edges, and duplicate edges.
+/** `clustersFromPairs` routes each `cc_grp` group (no column: one group)
+  * in-row through `graft_cc_local` when it has at most `ccLocalMaxEdges`
+  * edges and through the distributed pointer-jump loop otherwise. Every
+  * route must give the exact min-id labeling — same labels, sizes and
+  * canonicals — on chains (where min-id must propagate across many hops),
+  * cliques, singleton edges, duplicate edges, the empty relation and a
+  * chain of 60-bit ids (the WARC bridge's md5 doc ids), whose label sum
+  * passes 2^63.
   */
 class ClustersFromPairsSpec extends SparkSpec {
   import spark.implicits._
 
-  private def labels(df: DataFrame): Set[(Long, Long, Long, Boolean)] =
+  private type Labeling = Set[(Long, Long, Long, Boolean)]
+
+  private def labels(df: DataFrame): Labeling =
     df.select("doc_id", "cluster_id", "cluster_size", "is_canonical").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3))).toSet
 
-  // chain 1-2-3-4-5 (pointer jumping needs rounds), clique {10,11,12},
-  // pair {20,21}, duplicate + reversed-duplicate edges
-  private val edges = Seq(
+  // chain 1-2-3-4-5 (5 edges with the reversed duplicate), clique
+  // {10,11,12} (3 edges), pair {20,21} (2 duplicate edges)
+  private val mixed = Seq(
     (1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L),
     (10L, 11L), (10L, 12L), (11L, 12L),
     (20L, 21L), (20L, 21L), (3L, 2L)).toDF("doc_a", "doc_b")
 
-  private val expected = Set(
+  private val mixedLabels: Labeling = Set(
     (1L, 1L, 5L, true), (2L, 1L, 5L, false), (3L, 1L, 5L, false),
     (4L, 1L, 5L, false), (5L, 1L, 5L, false),
     (10L, 10L, 3L, true), (11L, 10L, 3L, false), (12L, 10L, 3L, false),
     (20L, 20L, 2L, true), (21L, 20L, 2L, false))
 
-  test("whole-set in-row closure ≡ distributed loop (ccLocalMaxEdges routing)") {
-    val fast = labels(Dedup.clustersFromPairs(edges))
-    Dedup.releaseIntermediates()
-    spark.conf.set("spark.graft.dedup.ccLocalMaxEdges", "1")
-    try {
-      val loop = labels(Dedup.clustersFromPairs(edges))
-      assert(fast == expected)
-      assert(loop == expected)
-    } finally {
-      spark.conf.unset("spark.graft.dedup.ccLocalMaxEdges")
-      Dedup.releaseIntermediates()
-    }
-  }
+  private val Base = 1L << 59
+  private val wide = (0L until 40L).map(i => (Base + i, Base + i + 1)).toDF("doc_a", "doc_b")
+  private val wideLabels: Labeling =
+    (0L to 40L).map(i => (Base + i, Base, 41L, i == 0L)).toSet
 
-  test("keyed per-group closure ≡ global closure when groups are component-closed") {
-    // tag every edge with its (known) component id — the closed-grouping
-    // precondition retract (old cluster ids) and SemDeDup (cells) satisfy
-    val tagged = edges.withColumn("cc_grp",
-      when(col("doc_a") <= 5, 1L).when(col("doc_a") < 20, 2L).otherwise(3L))
-    val keyed = labels(Dedup.clustersFromPairsKeyed(tagged))
-    Dedup.releaseIntermediates()
-    assert(keyed == expected)
-    // cap=1 routes every group onto the loop fallback; labels identical
-    spark.conf.set("spark.graft.dedup.ccLocalMaxEdges", "1")
-    try {
-      val viaLoop = labels(Dedup.clustersFromPairsKeyed(tagged))
-      assert(viaLoop == expected)
-    } finally {
-      spark.conf.unset("spark.graft.dedup.ccLocalMaxEdges")
-      Dedup.releaseIntermediates()
-    }
-  }
+  private val empty = Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")
 
-  test("empty pair set closes to an empty labeling on both paths") {
-    val empty = Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")
-    assert(Dedup.clustersFromPairs(empty).count() == 0)
-    assert(Dedup.clustersFromPairsKeyed(
-      empty.withColumn("cc_grp", lit(0L))).count() == 0)
-    Dedup.releaseIntermediates()
+  // (graph, its closed grouping for the tagged shape, exact labeling); at
+  // cap 3 the tagged mixed graph closes the clique and the pair in-row and
+  // sends the 5-edge chain to the loop in the same call
+  private val graphs: Seq[(String, DataFrame, Column, Labeling)] = Seq(
+    ("chain+clique+pair", mixed,
+      when(col("doc_a") <= 5, 1L).when(col("doc_a") < 20, 2L).otherwise(3L), mixedLabels),
+    ("empty", empty, lit(0L), Set.empty),
+    ("60-bit chain", wide, lit(7L), wideLabels))
+
+  test("routing table: every shape and cap closes to the exact labeling") {
+    for ((name, edges, grp, want) <- graphs; tagged <- Seq(false, true);
+         cap <- Seq(None, Some("3"), Some("1"))) {
+      val in = if (tagged) edges.withColumn("cc_grp", grp) else edges
+      cap.foreach(spark.conf.set("spark.graft.dedup.ccLocalMaxEdges", _))
+      val got = try labels(Dedup.clustersFromPairs(in))
+        finally {
+          spark.conf.unset("spark.graft.dedup.ccLocalMaxEdges")
+          Dedup.releaseIntermediates()
+        }
+      assert(got == want,
+        s"$name, ${if (tagged) "tagged" else "untagged"}, cap ${cap.getOrElse("default")}")
+    }
   }
 }

@@ -25,8 +25,9 @@ CONF+=";spark.graft.dedup.cosineTau=0.3"
 CONF+=";spark.graft.dedup.semTau=0.3"
 CONF+=";spark.graft.dedup.hotBandDocs=48"
 CONF+=";spark.graft.dedup.ccMaxIters=16"
-# plan-only: cap 1 routes every retract re-closure group onto the
-# distributed-loop fallback — results must be identical (like verifySalts)
+# plan-only: cap 1 routes every connected-components call (every group of
+# every CC caller) onto the distributed loop — results must be identical
+# (like verifySalts)
 CONF+=";spark.graft.dedup.ccLocalMaxEdges=1"
 CONF+=";spark.graft.dedup.embedNProbe=3"
 CONF+=";spark.graft.dedup.srpBits=24"
