@@ -51,9 +51,11 @@ class ClustersFromPairsSpec extends SparkSpec {
     ("empty", empty, lit(0L), Set.empty),
     ("60-bit chain", wide, lit(7L), wideLabels))
 
-  test("routing table: every shape and cap closes to the exact labeling") {
-    for ((name, edges, grp, want) <- graphs; tagged <- Seq(false, true);
-         cap <- Seq(None, Some("3"), Some("1"))) {
+  // runs every (graph, tagged, cap) row of the routing table that `pick`
+  // selects; the three tests below partition the table between them
+  private def route(pick: (String, Boolean) => Boolean): Unit =
+    for ((name, edges, grp, want) <- graphs; tagged <- Seq(false, true)
+         if pick(name, tagged); cap <- Seq(None, Some("3"), Some("1"))) {
       val in = if (tagged) edges.withColumn("cc_grp", grp) else edges
       cap.foreach(spark.conf.set("spark.graft.dedup.ccLocalMaxEdges", _))
       val got = try labels(Dedup.clustersFromPairs(in))
@@ -64,5 +66,16 @@ class ClustersFromPairsSpec extends SparkSpec {
       assert(got == want,
         s"$name, ${if (tagged) "tagged" else "untagged"}, cap ${cap.getOrElse("default")}")
     }
+
+  test("whole-set in-row closure ≡ distributed loop (ccLocalMaxEdges routing)") {
+    route((name, tagged) => name != "empty" && !tagged)
+  }
+
+  test("keyed per-group closure ≡ global closure when groups are component-closed") {
+    route((name, tagged) => name != "empty" && tagged)
+  }
+
+  test("empty pair set closes to an empty labeling on both paths") {
+    route((name, _) => name == "empty")
   }
 }
