@@ -294,25 +294,6 @@ object Dedup {
     BandingStamp.stamp(banded.select(keep: _*))
   }
 
-  /** The verify re-join of candidate id pairs against a per-doc side table
-    * (shingle sets / embeddings) — the one dedup join whose key can be HOT:
-    * a boilerplate template near-duplicated 10⁴× appears in ~10⁴ candidate
-    * pairs, all hashing its doc id to ONE reducer. With
-    * `spark.graft.dedup.verifySalts` > 1 the join salts via
-    * [[Skew.saltedJoin]] (hot key fans out across `salts` reducers; only
-    * the narrow side table is replicated), deterministically keyed on the
-    * pair's OTHER id so results are bit-identical at any salt count
-    * (SkewSpec asserts parity and the salted plan shape). Default 1 = plain
-    * join: AQE's skew split already handles moderate skew; salting is the
-    * explicit lever for the 10⁶-pair outlier a cap-less corpus can produce.
-    */
-  private def verifySideJoin(cands: DataFrame, side: DataFrame,
-      key: String, saltBy: String): DataFrame = {
-    val salts = GraftConf.dedupVerifySalts
-    if (salts > 1) Skew.saltedJoin(cands, side, key, saltBy, salts)
-    else cands.join(side, key)
-  }
-
   /** Exact-Jaccard verification of candidate id pairs against the hashed
     * shingle sets: the candidate re-join moves 8-byte longs per shingle
     * instead of strings, and the intersect compares longs.
@@ -323,10 +304,9 @@ object Dedup {
     * float boundary ever deciding a row).
     */
   private def verifyCounts(candIds: DataFrame, sets: DataFrame): DataFrame = {
-    val a = verifySideJoin(candIds,
-      sets.select(col("doc_id").as("doc_a"), col("hs").as("sha")), "doc_a", "doc_b")
-    verifySideJoin(a,
-      sets.select(col("doc_id").as("doc_b"), col("hs").as("shb")), "doc_b", "doc_a")
+    candIds
+      .join(sets.select(col("doc_id").as("doc_a"), col("hs").as("sha")), "doc_a")
+      .join(sets.select(col("doc_id").as("doc_b"), col("hs").as("shb")), "doc_b")
       .withColumn("inter", size(array_intersect(col("sha"), col("shb"))).cast("long"))
       .withColumn("uni",
         (size(col("sha")) + size(col("shb"))).cast("long") - col("inter"))
@@ -1366,10 +1346,8 @@ object Dedup {
   private[graft] def verifyCosine(candIds: DataFrame, embs: DataFrame,
       tau: Double = CosineTau): DataFrame = {
     val e = cosineEmbOf(embs)
-    val a = verifySideJoin(candIds,
-      e.select(col("vec_id").as("id_a"), col("emb").as("ea")), "id_a", "id_b")
-    withCosineAtLeast(verifySideJoin(a,
-        e.select(col("vec_id").as("id_b"), col("emb").as("eb")), "id_b", "id_a"),
+    val a = candIds.join(e.select(col("vec_id").as("id_a"), col("emb").as("ea")), "id_a")
+    withCosineAtLeast(a.join(e.select(col("vec_id").as("id_b"), col("emb").as("eb")), "id_b"),
       expr("graft_dot(ea, eb)"), tau)
       .select("id_a", "id_b", "cos")
   }
@@ -1849,7 +1827,7 @@ object Dedup {
     val inRow = ccLocalOf(routed.filter(col("in_row"))
       .groupBy(grp.map(col): _*)
       .agg(collect_list(struct(col("doc_a"), col("doc_b"))).as("es")))
-    inRow.unionByName(clustersFromPairsGuardedLoop(
+    inRow.unionByName(clustersFromPairsLoop(
       routed.filter(!col("in_row")).select("doc_a", "doc_b")))
   }
 
@@ -1863,60 +1841,24 @@ object Dedup {
         col("r.cluster_size").as("cluster_size"),
         (col("r.doc_id") === col("r.cluster_id")).as("is_canonical"))
 
-  /** The distributed pointer-jump loop with its constraint-propagation
-    * conf guard — where [[clustersFromPairs]] sends over-cap groups.
+  /** The distributed pointer-jump loop — where [[clustersFromPairs]]
+    * sends the edges of over-cap groups.
     */
-  private def clustersFromPairsGuardedLoop(pairs: DataFrame): DataFrame = {
-    // Catalyst's union-constraint rewrite (UnionBase.rewriteConstraints)
-    // throws `key not found` on this loop's label unions when the pair
-    // source is a local relation (planted spec corpora) — a constraint
-    // survives referencing an attribute outside the union child's output.
-    // Constraint propagation buys nothing in this loop (bare aggregates
-    // and equi-joins, no filters to infer), so scope it off for the
-    // loop's actions and restore afterwards.
-    val spark = pairs.sparkSession
-    // the conf is SESSION-global: two concurrent CC loops in one session
-    // must not interleave save/restore (the first loop's restore would
-    // re-enable the rewrite mid-flight in the second, or the saved
-    // 'false' would leak as the restored value). Ref-count per session:
-    // the first entrant saves + disables, the last exiter restores.
-    ccConfGuard.synchronized {
-      val (depth, prev) = ccConfGuard.getOrElse(spark, (0, None: Option[String]))
-      if (depth == 0) {
-        val saved = spark.conf.getOption(CcCpKey)
-        spark.conf.set(CcCpKey, "false")
-        ccConfGuard.update(spark, (1, saved))
-      } else ccConfGuard.update(spark, (depth + 1, prev))
-    }
-    try clustersFromPairsLoop(pairs)
-    finally ccConfGuard.synchronized {
-      val (depth, prev) = ccConfGuard(spark)
-      if (depth == 1) {
-        prev match {
-          case Some(v) => spark.conf.set(CcCpKey, v)
-          case None => spark.conf.unset(CcCpKey)
-        }
-        ccConfGuard.remove(spark)
-      } else ccConfGuard.update(spark, (depth - 1, prev))
-    }
-  }
-
-  private val CcCpKey = "spark.sql.constraintPropagation.enabled"
-  /** session → (active CC-loop count, conf value saved by the first). */
-  private val ccConfGuard =
-    scala.collection.mutable.Map.empty[SparkSession, (Int, Option[String])]
-
   private def clustersFromPairsLoop(pairs: DataFrame): DataFrame = {
-    // inline, not self-union: one scan emits both edge directions, and it
-    // sidesteps Catalyst's union-constraint rewrite, which throws on the
-    // shared-subplan attribute ids when `pairs` is a local relation
-    // (planted spec corpora; SPARK-behaviour observed on 4.1). Not
-    // persisted: `pairs` reads the router's checkpoint, so each round's
-    // re-derivation is one in-memory scan, and a cached copy would cost a
-    // job of its own under AQE.
+    // one scan emits both edge directions plus a self-loop per endpoint,
+    // so a round's propagation over `edges` already carries every node's
+    // own label and the loop needs no union at all. A union of the label
+    // table with its own propagation trips Catalyst's union-constraint
+    // rewrite (`key not found` on the shared-subplan attribute ids when
+    // `pairs` is a local relation, observed on Spark 4.1). Not persisted:
+    // `pairs` reads the router's checkpoint, so each round's re-derivation
+    // is one in-memory scan, and a cached copy would cost a job of its
+    // own under AQE.
     val edges = pairs.selectExpr(
       """inline(array(named_struct('src', doc_a, 'dst', doc_b),
-        |             named_struct('src', doc_b, 'dst', doc_a)))""".stripMargin)
+        |             named_struct('src', doc_b, 'dst', doc_a),
+        |             named_struct('src', doc_a, 'dst', doc_a),
+        |             named_struct('src', doc_b, 'dst', doc_b)))""".stripMargin)
     // round-0 labels = min over self + direct neighborhood (not just self):
     // near-dup components are mostly CLIQUES (every pair similar), which
     // this initialization already labels correctly — the loop then runs a
@@ -1930,10 +1872,7 @@ object Dedup {
     // point is the same. The checkpoint is LAZY: the label-sum job below
     // is the first action on each round's labels and materializes it.
     var labels =
-      edges.selectExpr(
-          """inline(array(named_struct('id', dst, 'comp', src),
-            |             named_struct('id', src, 'comp', src)))""".stripMargin)
-        .groupBy("id").agg(min("comp").as("comp"))
+      edges.groupBy(col("dst").as("id")).agg(min("src").as("comp"))
         .localCheckpoint(false)
     // Convergence test without an extra join-and-count job: labels only ever
     // DECREASE under min-propagation over a fixed node set, so sum(comp) is
@@ -1967,8 +1906,7 @@ object Dedup {
     while (nodes > 0L && !converged && iter < CcMaxIters) {
       val prop = edges.join(labels, edges("src") === labels("id"))
         .select(col("dst").as("id"), col("comp"))
-      val viaEdges = labels.select("id", "comp").union(prop)
-        .groupBy("id").agg(min("comp").as("comp"))
+      val viaEdges = prop.groupBy("id").agg(min("comp").as("comp"))
       // one jump per round: a second jump would save ~1 round but costs a
       // second label self-join every round — measured slower at every scale
       // tried (the label table is small; per-round joins, not depth,

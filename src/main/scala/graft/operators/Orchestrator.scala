@@ -38,11 +38,10 @@ object Orchestrator {
       .contractOrderBy("doc_id")
   }
 
-  val formRecoveredSql: String = {
-    val fieldSelects = QueryLogForm.fields.map { f =>
-      val rungs = f.allPatterns.map(p => s"nullif(regexp_extract(text, '$p', 1), '')")
-      s"coalesce(${rungs.mkString(", ")}) AS ${f.name}"
-    }
+  /** SQL twin of [[formRecovered]]'s projection over the `form` CTE: the
+    * default-filled field columns, then `n_recovered`.
+    */
+  private val recoveredColsSql: String = {
     val outCols = QueryLogForm.fields.map { f =>
       f.default match {
         case Some(d) => s"coalesce(${f.name}, '$d') AS ${f.name}"
@@ -51,12 +50,15 @@ object Orchestrator {
     }
     val recovered = QueryLogForm.fields.collect { case f if f.default.isDefined =>
       s"(CASE WHEN ${f.name} IS NULL THEN 1 ELSE 0 END)" }.mkString(" + ")
-    s"""WITH form AS (SELECT doc_id, ${fieldSelects.mkString(",\n  ")} FROM documents)
-       |SELECT doc_id, ${outCols.mkString(", ")},
-       |  CAST($recovered AS BIGINT) AS n_recovered
+    s"""${outCols.mkString(", ")},
+       |  CAST($recovered AS BIGINT) AS n_recovered""".stripMargin
+  }
+
+  val formRecoveredSql: String =
+    s"""WITH ${SchemaExtract.formCteSql}
+       |SELECT doc_id, $recoveredColsSql
        |FROM form
        |ORDER BY doc_id""".stripMargin
-  }
 
   /** `pipeline_output`: the finalize node — recovered fields + completeness
     * + clause-graph stats per document, the corpus analog of
@@ -83,22 +85,7 @@ object Orchestrator {
       .contractOrderBy("doc_id")
   }
 
-  val pipelineOutputSql: String = {
-    val required = QueryLogForm.fields.filter(_.required)
-    val fieldSelects = QueryLogForm.fields.map { f =>
-      val rungs = f.allPatterns.map(p => s"nullif(regexp_extract(text, '$p', 1), '')")
-      s"coalesce(${rungs.mkString(", ")}) AS ${f.name}"
-    }
-    val outCols = QueryLogForm.fields.map { f =>
-      f.default match {
-        case Some(d) => s"coalesce(${f.name}, '$d') AS ${f.name}"
-        case None    => f.name
-      }
-    }
-    val recovered = QueryLogForm.fields.collect { case f if f.default.isDefined =>
-      s"(CASE WHEN ${f.name} IS NULL THEN 1 ELSE 0 END)" }.mkString(" + ")
-    val isComplete = required.map(f => s"${f.name} IS NOT NULL").mkString(" AND ")
-    val missing = required.map(f => s"CASE WHEN ${f.name} IS NULL THEN '${f.name}' END").mkString(", ")
+  val pipelineOutputSql: String =
     // block/label CTEs come from Layout (same constants as the Spark side)
     s"""${Layout.blocksCte}, sec AS (
        |  SELECT doc_id, block_id, label,
@@ -112,16 +99,14 @@ object Orchestrator {
        |), cstats AS (
        |  SELECT doc_id, count(*) AS n_clauses, CAST(sum(n_blocks) AS BIGINT) AS n_clause_blocks
        |  FROM cg GROUP BY doc_id
-       |), form AS (SELECT doc_id, ${fieldSelects.mkString(",\n  ")} FROM documents)
-       |SELECT form.doc_id, ${outCols.mkString(", ")},
-       |  CAST($recovered AS BIGINT) AS n_recovered,
-       |  $isComplete AS is_complete,
-       |  concat_ws(',', $missing) AS missing_fields,
+       |), ${SchemaExtract.formCteSql}
+       |SELECT form.doc_id, $recoveredColsSql,
+       |  ${Validation.isCompleteSql} AS is_complete,
+       |  ${Validation.missingFieldsSql} AS missing_fields,
        |  coalesce(cstats.n_clauses, 0) AS n_clauses,
        |  coalesce(cstats.n_clause_blocks, 0) AS n_clause_blocks
        |FROM form LEFT JOIN cstats ON form.doc_id = cstats.doc_id
        |ORDER BY form.doc_id""".stripMargin
-  }
 
   /** The LangGraph-DAG analog: named stages composed in order (each stage is
     * lazy plan construction — `run` returns the fused final plan).

@@ -100,6 +100,13 @@ object SchemaExtract {
        |FROM documents
        |ORDER BY doc_id""".stripMargin
 
+  /** The form-ETL oracles' `form` CTE: [[extractFieldsSql]]'s field
+    * ladders, one row per document, for `form_complete`, `form_recovered`
+    * and `pipeline_output` to build on.
+    */
+  private[operators] val formCteSql: String =
+    s"form AS (SELECT doc_id, ${QueryLogForm.fields.map(fieldSql).mkString(",\n  ")} FROM documents)"
+
   // ---- schema-parameterized extraction (form_filler.py:19 populate) -------
 
   /** Run ANY loaded [[FormSchema]]'s extraction ladder over the corpus —

@@ -98,8 +98,9 @@ object UnifiedDedupStore {
     // and the journal-done rename (step 5) is completed by recover()
     // above, so this crawl's advance is already in the store and its
     // verdicts were already delivered — re-applying would double every
-    // lane's rows. Same idempotent-sink convention as the streaming
-    // runner's batchId guard (StreamOps.StoredUnifiedDedupIndex).
+    // lane's rows. A crawl id that is a streaming batchId
+    // (StreamOps.StoredUnifiedDedupIndex) makes this the idempotent-sink
+    // guard for `foreachBatch` re-delivery.
     if (isApplied(spark, path, crawlId)) return emptyVerdicts(spark)
     val (ix, membership) = read(spark, path)
     val pairs = Dedup.unifiedDeltaPairsPrepared(ix, crawlDocs, crawlEmbs)

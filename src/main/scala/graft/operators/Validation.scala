@@ -204,20 +204,22 @@ object Validation {
       .contractOrderBy("doc_id")
   }
 
+  /** SQL twins of [[formComplete]]'s `is_complete` and `missing_fields`. */
+  private[operators] val isCompleteSql: String =
+    QueryLogForm.fields.filter(_.required).map(f => s"${f.name} IS NOT NULL").mkString(" AND ")
+
+  private[operators] val missingFieldsSql: String =
+    QueryLogForm.fields.filter(_.required)
+      .map(f => s"CASE WHEN ${f.name} IS NULL THEN '${f.name}' END")
+      .mkString("concat_ws(',', ", ", ", ")")
+
   val formCompleteSql: String = {
-    val required = QueryLogForm.fields.filter(_.required)
-    val all = QueryLogForm.fields
-    val fieldSelects = QueryLogForm.fields.map { f =>
-      val rungs = f.allPatterns.map(p => s"nullif(regexp_extract(text, '$p', 1), '')")
-      s"coalesce(${rungs.mkString(", ")}) AS ${f.name}"
-    }
-    val missing = required.map(f => s"CASE WHEN ${f.name} IS NULL THEN '${f.name}' END").mkString(", ")
-    val nFilled = all.map(f => s"(CASE WHEN ${f.name} IS NOT NULL THEN 1 ELSE 0 END)").mkString(" + ")
-    val isComplete = required.map(f => s"${f.name} IS NOT NULL").mkString(" AND ")
-    s"""WITH form AS (SELECT doc_id, ${fieldSelects.mkString(",\n  ")} FROM documents)
-       |SELECT doc_id, $isComplete AS is_complete,
+    val nFilled = QueryLogForm.fields
+      .map(f => s"(CASE WHEN ${f.name} IS NOT NULL THEN 1 ELSE 0 END)").mkString(" + ")
+    s"""WITH ${SchemaExtract.formCteSql}
+       |SELECT doc_id, $isCompleteSql AS is_complete,
        |  CAST($nFilled AS BIGINT) AS n_filled,
-       |  concat_ws(',', $missing) AS missing_fields
+       |  $missingFieldsSql AS missing_fields
        |FROM form
        |ORDER BY doc_id""".stripMargin
   }

@@ -170,21 +170,6 @@ package object operators {
       * in-expression assert, never by silently mis-signing.
       */
     def dedupSrpDims: Int = positive("spark.graft.dedup.srpDims", "64")
-    /** Salting factor for the dedup verify re-joins
-      * (`spark.graft.dedup.verifySalts`, default 1 = plain join). The
-      * candidate-pair → sets/embeddings re-join is the one dedup join whose
-      * key can be HOT (a boilerplate template near-duplicated 10⁴× appears
-      * in ~10⁴ candidate pairs, all hashing to one reducer); salts > 1
-      * routes a hot doc's pairs across `salts` reducers via
-      * [[Skew.saltedJoin]], replicating only the narrow per-doc sets
-      * relation. It salts the MinHash lanes' Jaccard verify (batch, delta
-      * and retract, and the similarity counts) and the cosine verify of the
-      * trained-IVF and SemDeDup lanes. The SRP lane has no id-keyed re-join
-      * to salt: it scores pairs inside each capped bucket. Plan-only:
-      * results are identical at any value (spec-asserted), so the oracle
-      * SQL never sees it.
-      */
-    def dedupVerifySalts: Int = positive("spark.graft.dedup.verifySalts", "1")
     /** SRP hot-bucket cap (`spark.graft.dedup.srpHotBandDocs`) — separate
       * from the minhash cap because SRP band values live in a 2^srpBandBits
       * space (dense by construction), not a 60-bit hash space: the same

@@ -377,17 +377,9 @@ object StreamOps {
       * delivered batchId.
       */
     def processBatch(batchDocs: DataFrame, batchEmbs: DataFrame,
-        batchId: Long): DataFrame = {
-      val spark = batchDocs.sparkSession
-      val id = s"batch-$batchId"
-      if (UnifiedDedupStore.isApplied(spark, path, id)) {
-        // crash replay: this batch already advanced the store and its
-        // verdicts were delivered before the crash — re-advancing would
-        // double the lane rows, so the re-delivery is a no-op
-        UnifiedDedupStore.emptyVerdicts(spark)
-      } else
-        UnifiedDedupStore.processCrawl(spark, path, batchDocs, batchEmbs, id)
-    }
+        batchId: Long): DataFrame =
+      UnifiedDedupStore.processCrawl(batchDocs.sparkSession, path,
+        batchDocs, batchEmbs, s"batch-$batchId")
   }
 
   /** Stream-stream interval join: each purchase joined to the clicks of the

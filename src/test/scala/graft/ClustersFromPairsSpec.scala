@@ -11,7 +11,8 @@ import graft.operators.Dedup
   * canonicals — on chains (where min-id must propagate across many hops),
   * cliques, singleton edges, duplicate edges, the empty relation and a
   * chain of 60-bit ids (the WARC bridge's md5 doc ids), whose label sum
-  * passes 2^63.
+  * passes 2^63. Each graph also runs as a `localCheckpoint(true)`ed input,
+  * and no call may leave the session's constraint-propagation conf changed.
   */
 class ClustersFromPairsSpec extends SparkSpec {
   import spark.implicits._
@@ -51,20 +52,29 @@ class ClustersFromPairsSpec extends SparkSpec {
     ("empty", empty, lit(0L), Set.empty),
     ("60-bit chain", wide, lit(7L), wideLabels))
 
-  // runs every (graph, tagged, cap) row of the routing table that `pick`
-  // selects; the three tests below partition the table between them
+  private val CpKey = "spark.sql.constraintPropagation.enabled"
+
+  // runs every (graph, tagged, checkpointed, cap) row of the routing table
+  // that `pick` selects; the three tests below partition the table between
+  // them. Caps 3 and 1 put edges on the loop, which must plan over local
+  // relations and checkpointed scans alike.
   private def route(pick: (String, Boolean) => Boolean): Unit =
     for ((name, edges, grp, want) <- graphs; tagged <- Seq(false, true)
-         if pick(name, tagged); cap <- Seq(None, Some("3"), Some("1"))) {
-      val in = if (tagged) edges.withColumn("cc_grp", grp) else edges
+         if pick(name, tagged); ckpt <- Seq(false, true);
+         cap <- Seq(None, Some("3"), Some("1"))) {
+      val shaped = if (tagged) edges.withColumn("cc_grp", grp) else edges
+      val in = if (ckpt) shaped.localCheckpoint(true) else shaped
+      val row = s"$name, ${if (tagged) "tagged" else "untagged"}, " +
+        s"${if (ckpt) "checkpointed" else "plain"}, cap ${cap.getOrElse("default")}"
+      val cp = spark.conf.getOption(CpKey)
       cap.foreach(spark.conf.set("spark.graft.dedup.ccLocalMaxEdges", _))
       val got = try labels(Dedup.clustersFromPairs(in))
         finally {
           spark.conf.unset("spark.graft.dedup.ccLocalMaxEdges")
           Dedup.releaseIntermediates()
         }
-      assert(got == want,
-        s"$name, ${if (tagged) "tagged" else "untagged"}, cap ${cap.getOrElse("default")}")
+      assert(got == want, row)
+      assert(spark.conf.getOption(CpKey) == cp, s"$row: $CpKey changed")
     }
 
   test("whole-set in-row closure ≡ distributed loop (ccLocalMaxEdges routing)") {

@@ -27,14 +27,13 @@ CONF+=";spark.graft.dedup.hotBandDocs=48"
 CONF+=";spark.graft.dedup.ccMaxIters=16"
 # plan-only: cap 1 routes every connected-components call (every group of
 # every CC caller) onto the distributed loop — results must be identical
-# (like verifySalts)
+# to the default's
 CONF+=";spark.graft.dedup.ccLocalMaxEdges=1"
 CONF+=";spark.graft.dedup.embedNProbe=3"
 CONF+=";spark.graft.dedup.srpBits=24"
 CONF+=";spark.graft.dedup.srpBandBits=3"
 # (srpDims is data-descriptive — it must equal the embedding table's real
 # dimension, so it stays at its default here)
-CONF+=";spark.graft.dedup.verifySalts=2"
 CONF+=";spark.graft.dedup.packedOccKey=true"
 CONF+=";spark.graft.dedup.srpHotBandDocs=128"
 CONF+=";spark.graft.decontam.fuzzyTau=0.4"
@@ -73,7 +72,7 @@ CONF+=";spark.graft.tfidf.topK=2"
 CONF+=";spark.graft.rrf.k=40"
 CONF+=";spark.graft.rrf.depth=7"
 # plan-only: forces the stored-hybrid vocab pushdown onto its broadcast
-# semi-join fallback — results must be identical (like verifySalts)
+# semi-join fallback — results must be identical to the default's
 CONF+=";spark.graft.rrf.vocabPushdownMax=1"
 CONF+=";spark.graft.mix.tempSqrts=2"
 CONF+=";spark.graft.winnow.k=3"
@@ -99,6 +98,17 @@ CONF+=";spark.graft.quality.maxEllipsisPct=20"
 CONF+=";spark.graft.prune.dropPct=40"
 CONF+=";spark.graft.linedd.chunkWords=7"
 CONF+=";spark.graft.bpe.merges=11"
+
+# every swept key must still be read somewhere: a key with no string
+# literal under src/main/scala is a deleted knob, and sweeping it would be
+# a silent no-op
+STALE=0
+IFS=';' read -ra KVS <<< "$CONF"
+for kv in "${KVS[@]}"; do
+  key=${kv%%=*}
+  grep -rqF "\"$key\"" src/main/scala || { echo "no knob $key in src/main/scala"; STALE=1; }
+done
+[ "$STALE" = 0 ] || exit 1
 
 N_KNOBS=$(echo "$CONF" | tr ';' '\n' | wc -l)
 echo "sweeping $N_KNOBS knobs at non-default values over $SF"
