@@ -12,6 +12,14 @@ import graft.sources.Tables
   *
   * All rule thresholds compare in EXACT integer space (`a*scale < b`) so
   * the Spark and DuckDB sides can never disagree on a float boundary.
+  *
+  * The curation funnel (`corpus_curate`, its two crawl variants and
+  * `pipeline_curate`) moves each train doc through four rungs in a fixed
+  * order: quality → exact decontamination → fuzzy decontamination →
+  * dedup. `kept` is the AND of the rungs, `stage` names the first rung
+  * that fails (`kept` when none does), and a doc with no dedup verdict
+  * keeps. That rule is written once per engine: [[funnelOf]] in Spark,
+  * [[funnelTailSql]] in SQL; every funnel row is a caller.
   */
 object Curation {
 
@@ -47,9 +55,6 @@ object Curation {
   def qualityFilter(spark: SparkSession, dir: String): DataFrame =
     qualityFilterOf(Tables.documents(spark, dir))
 
-  /** Core over any (doc_id, text) relation — the seam [[corpusCurate]]
-    * composes; rules are per-doc so any corpus slice scores identically.
-    */
   /** Per-doc bigram array over `ws` — shared by the batch quality filter's
     * explode and the streaming lane's in-array run-length form.
     */
@@ -60,41 +65,59 @@ object Curation {
       | ELSE array() END""".stripMargin.replace("\n", "")
 
   /** Max bigram multiplicity of the doc's own `ws`, in-row: sort the
-    * bigram array, take the longest equal-adjacent run. One expression
-    * shared by the batch filter and the streaming twin so the rule
-    * arithmetic cannot drift.
+    * bigram array, take the longest equal-adjacent run.
     */
-  private[graft] val topBigramRunExpr: String =
+  private val topBigramRunExpr: String =
     // graft_max_run: native max-equal-adjacent-run (the interpreted
     // aggregate-with-named_struct lambda this replaces allocated a 3-field
     // struct per element per row — measured slower than the explode path
     // it was meant to beat)
     s"graft_max_run(array_sort($bigramsExpr))"
 
-  def qualityFilterOf(docs: DataFrame): DataFrame = {
+  /** The per-doc quality counters `n_words`, `n_stop` and `top_bg` (over
+    * the doc's word array `ws`) added to any (doc_id, text) relation —
+    * shared by the batch filter and its streaming twin
+    * ([[graft.streaming.StreamOps.curateStream]]).
+    */
+  private[graft] def withQualityCounters(docs: DataFrame): DataFrame = {
     val stopList = TextAnalysis.EnStopwords.map("'" + _ + "'").mkString(",")
     // top_bg in-row (r18): the max bigram multiplicity as a sort + max-run
-    // aggregate over the doc's own bigram array — the exact expression the
-    // streaming twin ([[graft.streaming.StreamOps.curateStream]]) has used
-    // since r15, spec-asserted equal to the old explode → two-groupBy →
-    // join-back path, which shuffled the corpus's bigrams twice per funnel
-    val joined = docs
+    // aggregate over the doc's own bigram array, spec-asserted equal to
+    // the old explode → two-groupBy → join-back path, which shuffled the
+    // corpus's bigrams twice per funnel
+    docs
       .withColumn("ws", split(col("text"), " "))
       .withColumn("n_words", size(col("ws")).cast("long"))
       .withColumn("n_stop",
         expr(s"size(filter(ws, w -> w IN ($stopList)))").cast("long"))
       .withColumn("top_bg", expr(topBigramRunExpr))
+  }
+
+  /** The four quality rules over the [[withQualityCounters]] columns, as
+    * (`keep`, `reasons`): keep iff no rule fires; reasons lists the fired
+    * rules, comma-joined.
+    */
+  private[graft] def qualityVerdict: (Column, Column) = {
     val rShort = col("n_words") < MinWords
     val rLong = col("n_words") > MaxWords
     val rStop = col("n_stop") * 100 < col("n_words") * MinStopPct
     val rRep = col("top_bg") * 100 > col("n_words") * MaxTopBigramPct
-    joined
-      .withColumn("keep", !rShort && !rLong && !rStop && !rRep)
-      .withColumn("reasons", array_join(concat(
+    (!rShort && !rLong && !rStop && !rRep,
+      array_join(concat(
         when(rShort, array(lit("too_short"))).otherwise(array()),
         when(rLong, array(lit("too_long"))).otherwise(array()),
         when(rStop, array(lit("low_stopword"))).otherwise(array()),
         when(rRep, array(lit("repetitive"))).otherwise(array())), ","))
+  }
+
+  /** Core over any (doc_id, text) relation — the seam [[corpusCurate]]
+    * composes; rules are per-doc so any corpus slice scores identically.
+    */
+  def qualityFilterOf(docs: DataFrame): DataFrame = {
+    val (keep, reasons) = qualityVerdict
+    withQualityCounters(docs)
+      .withColumn("keep", keep)
+      .withColumn("reasons", reasons)
       .select("doc_id", "n_words", "n_stop", "top_bg", "keep", "reasons")
       .contractOrderBy("doc_id")
   }
@@ -753,6 +776,85 @@ object Curation {
        |WHERE t.vec_id % $FuzzyEvalMod <> 0
        |ORDER BY t.vec_id""".stripMargin
 
+  // ---- the curation funnel ----------------------------------------------
+
+  /** The curation funnel core, Spark side — every funnel row
+    * (`corpus_curate`, `corpus_curate_delta`, `corpus_curate_delta_best`,
+    * `pipeline_curate`) is this over its own train ids and dedup rung.
+    * The quality rung scores `qualityDocs`; both decontamination sweeps
+    * run over `sweepDocs`, whose `isEval` rows are the benchmark.
+    */
+  private def curateFunnel(trainIds: DataFrame, qualityDocs: DataFrame,
+      sweepDocs: DataFrame, isEval: Column, dedup: Seq[DataFrame],
+      extras: Column*): DataFrame =
+    funnelOf(trainIds,
+      qualityFilterOf(qualityDocs).select(col("doc_id"), col("keep").as("q_keep")),
+      decontaminateFrom(sweepDocs, isEval)
+        .select(col("doc_id"), col("contaminated").as("contam_exact")),
+      decontaminateFuzzyFrom(sweepDocs, isEval)
+        .select(col("doc_id"), col("contaminated").as("contam_fuzzy")),
+      dedup, extras: _*)
+
+  /** The funnel's stage rule (see the object doc) over per-doc rung
+    * frames. `q`, `ce` and `cf` are (doc_id, q_keep | contam_exact |
+    * contam_fuzzy) and cover every train id; the `dedup` frames are
+    * left-joined on doc_id in order, the first carrying the dedup rung
+    * (true = keep) as its second column. Output: the seven funnel
+    * columns, then `extras` (expressions over any joined column).
+    */
+  private[graft] def funnelOf(trainIds: DataFrame, q: DataFrame, ce: DataFrame,
+      cf: DataFrame, dedup: Seq[DataFrame], extras: Column*): DataFrame = {
+    val rung = col(dedup.head.columns(1))
+    dedup.foldLeft(trainIds.join(q, "doc_id").join(ce, "doc_id").join(cf, "doc_id"))(
+        _.join(_, Seq("doc_id"), "left"))
+      .withColumn("dedup_keep", rung.isNull || rung)
+      .withColumn("kept",
+        col("q_keep") && !col("contam_exact") && !col("contam_fuzzy") &&
+          col("dedup_keep"))
+      .withColumn("stage",
+        when(!col("q_keep"), "quality")
+          .when(col("contam_exact"), "contam_exact")
+          .when(col("contam_fuzzy"), "contam_fuzzy")
+          .when(!col("dedup_keep"), "duplicate")
+          .otherwise("kept"))
+      .select(Seq("doc_id", "q_keep", "contam_exact", "contam_fuzzy",
+        "dedup_keep", "kept", "stage").map(col) ++ extras: _*)
+      .contractOrderBy("doc_id")
+  }
+
+  /** The funnel's SQL tail, [[funnelOf]]'s twin. `dedupRel` is
+    * left-joined as `v` on `v.id` and `keep` is its keep predicate.
+    * The quality and both decontamination sub-queries are spliced in
+    * AFTER stripMargin: `qualityFilterSql` carries `||` list-concat lines
+    * an outer stripMargin would truncate at their first pipe.
+    */
+  private def funnelTailSql(dedupRel: String, keep: String, where: String,
+      extraCols: Seq[String] = Nil, extraJoins: Seq[String] = Nil): String = {
+    val dedupKeep = s"(v.id IS NULL OR $keep)"
+    s"""
+       |SELECT d.doc_id, q.keep AS q_keep,
+       |  ce.contaminated AS contam_exact,
+       |  cf.contaminated AS contam_fuzzy,
+       |  $dedupKeep AS dedup_keep,
+       |  (q.keep AND NOT ce.contaminated AND NOT cf.contaminated
+       |    AND $dedupKeep) AS kept,
+       |  CASE WHEN NOT q.keep THEN 'quality'
+       |       WHEN ce.contaminated THEN 'contam_exact'
+       |       WHEN cf.contaminated THEN 'contam_fuzzy'
+       |       WHEN NOT $dedupKeep THEN 'duplicate'
+       |       ELSE 'kept' END AS stage${extraCols.map(",\n  " + _).mkString}
+       |FROM documents d
+       |JOIN (%QF%) q ON d.doc_id = q.doc_id
+       |JOIN (%CE%) ce ON d.doc_id = ce.doc_id
+       |JOIN (%CF%) cf ON d.doc_id = cf.doc_id
+       |LEFT JOIN $dedupRel v ON d.doc_id = v.id${extraJoins.map("\n" + _).mkString}
+       |WHERE $where
+       |ORDER BY d.doc_id""".stripMargin
+      .replace("%QF%", qualityFilterSql)
+      .replace("%CE%", decontaminateSqlAt(FuzzyEvalMod))
+      .replace("%CF%", decontaminateFuzzySql)
+  }
+
   // ---- corpus_curate ------------------------------------------------------
 
   /** `corpus_curate`: the full curation FUNNEL a pretraining corpus runs —
@@ -790,64 +892,13 @@ object Curation {
     corpusCurateFromPairs(docs, Dedup.unifiedPairsOf(docs, embs), isEval)
 
   private[graft] def corpusCurateFromPairs(docs: DataFrame, pairs: DataFrame,
-      isEval: Column): DataFrame = {
-    val q = qualityFilterOf(docs).select(col("doc_id"), col("keep").as("q_keep"))
-    val ce = decontaminateFrom(docs, isEval)
-      .select(col("doc_id"), col("contaminated").as("contam_exact"))
-    val cf = decontaminateFuzzyFrom(docs, isEval)
-      .select(col("doc_id"), col("contaminated").as("contam_fuzzy"))
-    val clusters = Dedup.clustersFromPairs(pairs)
-      .select(col("doc_id"), col("is_canonical"))
-    docs.filter(!isEval).select("doc_id")
-      .join(q, "doc_id")
-      .join(ce, "doc_id")
-      .join(cf, "doc_id")
-      .join(clusters, Seq("doc_id"), "left")
-      .withColumn("dedup_keep",
-        col("is_canonical").isNull || col("is_canonical"))
-      .withColumn("kept",
-        col("q_keep") && !col("contam_exact") && !col("contam_fuzzy") &&
-          col("dedup_keep"))
-      .withColumn("stage",
-        when(!col("q_keep"), "quality")
-          .when(col("contam_exact"), "contam_exact")
-          .when(col("contam_fuzzy"), "contam_fuzzy")
-          .when(!col("dedup_keep"), "duplicate")
-          .otherwise("kept"))
-      .select("doc_id", "q_keep", "contam_exact", "contam_fuzzy",
-        "dedup_keep", "kept", "stage")
-      .contractOrderBy("doc_id")
-  }
+      isEval: Column): DataFrame =
+    curateFunnel(docs.filter(!isEval).select("doc_id"), docs, docs, isEval,
+      Seq(Dedup.clustersFromPairs(pairs).select(col("doc_id"), col("is_canonical"))))
 
-  def corpusCurateSql: String = {
-    // embedded sub-queries are spliced in AFTER stripMargin: qualityFilterSql
-    // contains `||` list-concat lines that an outer stripMargin would
-    // truncate at their first pipe
-    val tail =
-      s"""
-         |SELECT d.doc_id, q.keep AS q_keep,
-         |  ce.contaminated AS contam_exact,
-         |  cf.contaminated AS contam_fuzzy,
-         |  (c.id IS NULL OR c.id = c.cluster_id) AS dedup_keep,
-         |  (q.keep AND NOT ce.contaminated AND NOT cf.contaminated
-         |    AND (c.id IS NULL OR c.id = c.cluster_id)) AS kept,
-         |  CASE WHEN NOT q.keep THEN 'quality'
-         |       WHEN ce.contaminated THEN 'contam_exact'
-         |       WHEN cf.contaminated THEN 'contam_fuzzy'
-         |       WHEN NOT (c.id IS NULL OR c.id = c.cluster_id) THEN 'duplicate'
-         |       ELSE 'kept' END AS stage
-         |FROM documents d
-         |JOIN (%QF%) q ON d.doc_id = q.doc_id
-         |JOIN (%CE%) ce ON d.doc_id = ce.doc_id
-         |JOIN (%CF%) cf ON d.doc_id = cf.doc_id
-         |LEFT JOIN cc c ON d.doc_id = c.id
-         |WHERE d.doc_id % $FuzzyEvalMod <> 0
-         |ORDER BY d.doc_id""".stripMargin
-        .replace("%QF%", qualityFilterSql)
-        .replace("%CE%", decontaminateSqlAt(FuzzyEvalMod))
-        .replace("%CF%", decontaminateFuzzySql)
-    Dedup.unifiedClosureCtes + tail
-  }
+  def corpusCurateSql: String =
+    Dedup.unifiedClosureCtes + funnelTailSql("cc", "v.id = v.cluster_id",
+      s"d.doc_id % $FuzzyEvalMod <> 0")
 
   // ---- corpus_curate_delta --------------------------------------------------
 
@@ -915,66 +966,20 @@ object Curation {
   private def curateDeltaFunnel(spark: SparkSession, dir: String,
       dedupKeep: DataFrame): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val isD = col("doc_id") % Dedup.DeltaIdMod === 0
     val isEval = col("doc_id") % FuzzyEvalMod === 0
-    val verdicts = dedupKeep
-    val crawl = docs.filter(isD).filter(!isEval)
+    val crawl = docs.filter(col("doc_id") % Dedup.DeltaIdMod === 0).filter(!isEval)
     // registry ∪ crawl: the eval side carves from the registry only, the
     // per-doc train verdicts cover exactly the crawl
-    val sweepDocs = docs.filter(isEval).unionByName(crawl)
-    val q = qualityFilterOf(crawl).select(col("doc_id"), col("keep").as("q_keep"))
-    val ce = decontaminateFrom(sweepDocs, isEval)
-      .select(col("doc_id"), col("contaminated").as("contam_exact"))
-    val cf = decontaminateFuzzyFrom(sweepDocs, isEval)
-      .select(col("doc_id"), col("contaminated").as("contam_fuzzy"))
-    crawl.select("doc_id")
-      .join(q, "doc_id")
-      .join(ce, "doc_id")
-      .join(cf, "doc_id")
-      .join(verdicts, Seq("doc_id"), "left")
-      .withColumn("dedup_keep", coalesce(col("dedup_keep"), lit(true)))
-      .withColumn("kept",
-        col("q_keep") && !col("contam_exact") && !col("contam_fuzzy") &&
-          col("dedup_keep"))
-      .withColumn("stage",
-        when(!col("q_keep"), "quality")
-          .when(col("contam_exact"), "contam_exact")
-          .when(col("contam_fuzzy"), "contam_fuzzy")
-          .when(!col("dedup_keep"), "duplicate")
-          .otherwise("kept"))
-      .select("doc_id", "q_keep", "contam_exact", "contam_fuzzy",
-        "dedup_keep", "kept", "stage")
-      .contractOrderBy("doc_id")
+    curateFunnel(crawl.select("doc_id"), crawl,
+      docs.filter(isEval).unionByName(crawl), isEval, Seq(dedupKeep))
   }
 
-  /** The funnel's SQL tail over any `dverdict(id, is_canonical)` CTE —
-    * one formulation serving both keep variants.
+  /** The crawl funnel's SQL tail over any `dverdict(id, is_canonical)`
+    * CTE — one formulation serving both keep variants.
     */
-  private def curateDeltaFunnelTailSql: String = {
-    val m = Dedup.DeltaIdMod
-    s"""
-       |SELECT d.doc_id, q.keep AS q_keep,
-       |  ce.contaminated AS contam_exact,
-       |  cf.contaminated AS contam_fuzzy,
-       |  (v.id IS NULL OR v.is_canonical) AS dedup_keep,
-       |  (q.keep AND NOT ce.contaminated AND NOT cf.contaminated
-       |    AND (v.id IS NULL OR v.is_canonical)) AS kept,
-       |  CASE WHEN NOT q.keep THEN 'quality'
-       |       WHEN ce.contaminated THEN 'contam_exact'
-       |       WHEN cf.contaminated THEN 'contam_fuzzy'
-       |       WHEN NOT (v.id IS NULL OR v.is_canonical) THEN 'duplicate'
-       |       ELSE 'kept' END AS stage
-       |FROM documents d
-       |JOIN (%QF%) q ON d.doc_id = q.doc_id
-       |JOIN (%CE%) ce ON d.doc_id = ce.doc_id
-       |JOIN (%CF%) cf ON d.doc_id = cf.doc_id
-       |LEFT JOIN dverdict v ON d.doc_id = v.id
-       |WHERE d.doc_id % $m = 0 AND d.doc_id % $FuzzyEvalMod <> 0
-       |ORDER BY d.doc_id""".stripMargin
-      .replace("%QF%", qualityFilterSql)
-      .replace("%CE%", decontaminateSqlAt(FuzzyEvalMod))
-      .replace("%CF%", decontaminateFuzzySql)
-  }
+  private def curateDeltaFunnelTailSql: String =
+    funnelTailSql("dverdict", "v.is_canonical",
+      s"d.doc_id % ${Dedup.DeltaIdMod} = 0 AND d.doc_id % $FuzzyEvalMod <> 0")
 
   def corpusCurateDeltaSql: String =
     Dedup.unifiedDeltaClosureCtes +
@@ -1085,39 +1090,16 @@ object Curation {
       .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"), col("lane"))
       .groupBy("doc_id")
       .agg(array_join(array_sort(collect_set(col("lane"))), "+").as("lanes"))
-    val q = qualityFilterOf(docs).select(col("doc_id"), col("keep").as("q_keep"))
-    val ce = decontaminateFrom(docs, isEval)
-      .select(col("doc_id"), col("contaminated").as("contam_exact"))
-    val cf = decontaminateFuzzyFrom(docs, isEval)
-      .select(col("doc_id"), col("contaminated").as("contam_fuzzy"))
-    docs.filter(!isEval).select("doc_id")
-      .join(q, "doc_id")
-      .join(ce, "doc_id")
-      .join(cf, "doc_id")
-      .join(clusters, Seq("doc_id"), "left")
-      .join(lanes, Seq("doc_id"), "left")
-      .withColumn("dedup_keep",
-        col("is_canonical").isNull || col("is_canonical"))
-      .withColumn("kept",
-        col("q_keep") && !col("contam_exact") && !col("contam_fuzzy") &&
-          col("dedup_keep"))
-      .withColumn("stage",
-        when(!col("q_keep"), "quality")
-          .when(col("contam_exact"), "contam_exact")
-          .when(col("contam_fuzzy"), "contam_fuzzy")
-          .when(!col("dedup_keep"), "duplicate")
-          .otherwise("kept"))
-      .select(col("doc_id"), col("q_keep"), col("contam_exact"),
-        col("contam_fuzzy"), col("dedup_keep"), col("kept"), col("stage"),
-        coalesce(col("cluster_size"), lit(1L)).as("cluster_size"),
-        coalesce(col("lanes"), lit("none")).as("lanes"))
-      .contractOrderBy("doc_id")
+    curateFunnel(docs.filter(!isEval).select("doc_id"), docs, docs, isEval,
+      Seq(clusters, lanes),
+      coalesce(col("cluster_size"), lit(1L)).as("cluster_size"),
+      coalesce(col("lanes"), lit("none")).as("lanes"))
   }
 
-  def pipelineCurateSql: String = {
-    // same splice discipline as corpusCurateSql: sub-queries with `||`
-    // list-concat go in AFTER stripMargin
-    val tail =
+  def pipelineCurateSql: String =
+    // the tagged-lanes CTE goes in AFTER stripMargin, like the funnel
+    // tail's sub-queries
+    Dedup.unifiedClosureCtes +
       s"""
          |, %TAGGED%
          |, sized AS (
@@ -1131,34 +1113,11 @@ object Curation {
          |    UNION ALL
          |    SELECT doc_b AS doc_id, lane FROM tagged
          |  ) dl GROUP BY doc_id
-         |)
-         |SELECT d.doc_id, q.keep AS q_keep,
-         |  ce.contaminated AS contam_exact,
-         |  cf.contaminated AS contam_fuzzy,
-         |  (s.id IS NULL OR s.id = s.cluster_id) AS dedup_keep,
-         |  (q.keep AND NOT ce.contaminated AND NOT cf.contaminated
-         |    AND (s.id IS NULL OR s.id = s.cluster_id)) AS kept,
-         |  CASE WHEN NOT q.keep THEN 'quality'
-         |       WHEN ce.contaminated THEN 'contam_exact'
-         |       WHEN cf.contaminated THEN 'contam_fuzzy'
-         |       WHEN NOT (s.id IS NULL OR s.id = s.cluster_id) THEN 'duplicate'
-         |       ELSE 'kept' END AS stage,
-         |  CAST(coalesce(s.cluster_size, 1) AS BIGINT) AS cluster_size,
-         |  coalesce(l.lanes, 'none') AS lanes
-         |FROM documents d
-         |JOIN (%QF%) q ON d.doc_id = q.doc_id
-         |JOIN (%CE%) ce ON d.doc_id = ce.doc_id
-         |JOIN (%CF%) cf ON d.doc_id = cf.doc_id
-         |LEFT JOIN sized s ON d.doc_id = s.id
-         |LEFT JOIN doc_lanes l ON d.doc_id = l.doc_id
-         |WHERE d.doc_id % $FuzzyEvalMod <> 0
-         |ORDER BY d.doc_id""".stripMargin
-        .replace("%TAGGED%", Dedup.taggedLanesCteSql)
-        .replace("%QF%", qualityFilterSql)
-        .replace("%CE%", decontaminateSqlAt(FuzzyEvalMod))
-        .replace("%CF%", decontaminateFuzzySql)
-    Dedup.unifiedClosureCtes + tail
-  }
+         |)""".stripMargin.replace("%TAGGED%", Dedup.taggedLanesCteSql) +
+      funnelTailSql("sized", "v.id = v.cluster_id", s"d.doc_id % $FuzzyEvalMod <> 0",
+        extraCols = Seq("CAST(coalesce(v.cluster_size, 1) AS BIGINT) AS cluster_size",
+          "coalesce(l.lanes, 'none') AS lanes"),
+        extraJoins = Seq("LEFT JOIN doc_lanes l ON d.doc_id = l.doc_id"))
 
   // ---- pack_sequences -----------------------------------------------------
 

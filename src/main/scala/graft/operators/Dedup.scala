@@ -1746,10 +1746,12 @@ object Dedup {
        |WHERE h.doc_id % $DeltaIdMod = 0
        |ORDER BY h.doc_id""".stripMargin
 
-  /** Safety cap on connected-components iterations (propagation rounds =
-    * graph diameter; real dup-cluster graphs are shallow — a chain this
-    * long would mean a pathological 2^20-doc near-dup chain). Conf-driven
-    * (`spark.graft.dedup.ccMaxIters`) like every other scale knob.
+  /** Cap on the distributed connected-components loop's rounds
+    * (`spark.graft.dedup.ccMaxIters`). Rounds grow with the longest
+    * near-dup chain the loop must close — about one hop per round on a
+    * chain whose ids are not ordered along it — so the cap bounds the
+    * chain length the loop can label, and a loop that reaches it without
+    * converging throws rather than return partial components.
     */
   def CcMaxIters: Int = GraftConf.ccMaxIters
 
@@ -1762,13 +1764,15 @@ object Dedup {
     *
     * Distributed min-label propagation WITH pointer jumping: each round
     * every node takes the min label over itself, its neighbors, and its
-    * label's label (path doubling — the hash-to-min trick), so rounds =
-    * O(log diameter), not O(diameter); each round is one key-shuffle edge
-    * join + one label self-join + one map-side-combined min aggregation
-    * over the EDGE set only (near-dup edges are a tiny fraction of corpus
-    * size at 100 TB — the corpus-scale work already happened in LSH). The
-    * per-round convergence action is by design: iterate-to-fixpoint needs a
-    * termination test; its input is the label table, not the corpus.
+    * label's label. The jump shortens chains whose ids rise along the
+    * chain, but in general a round closes about one hop, so rounds track
+    * the longest chain (capped by [[CcMaxIters]]); each round is one
+    * key-shuffle edge join + one label self-join + one map-side-combined
+    * min aggregation over the EDGE set only (near-dup edges are a tiny
+    * fraction of corpus size at 100 TB — the corpus-scale work already
+    * happened in LSH). The per-round convergence action is by design:
+    * iterate-to-fixpoint needs a termination test; its input is the label
+    * table, not the corpus.
     */
   def dedupClusters(spark: SparkSession, dir: String): DataFrame =
     dedupClustersRaw(spark, dir).contractOrderBy("doc_id")
@@ -1807,9 +1811,10 @@ object Dedup {
     * plan's exchanges when it is checkpointed); the loop's first label
     * job, which the loop runs anyway, materializes it and finds whether
     * any over-cap edge exists, and the final action reads it for the
-    * in-row side. Both paths are exact CC; ClustersFromPairsSpec asserts
-    * them equal, and tools/knob_sweep.sh runs cap 1, which puts every
-    * caller on the loop.
+    * in-row side. Both paths are exact CC — the loop whenever it
+    * converges within [[CcMaxIters]] rounds, and it throws when it does
+    * not; ClustersFromPairsSpec asserts them equal, and
+    * tools/knob_sweep.sh runs cap 1, which puts every caller on the loop.
     */
   private[graft] def clustersFromPairs(pairs: DataFrame): DataFrame = {
     val grp = if (pairs.columns.contains("cc_grp")) Seq("cc_grp") else Nil
@@ -1886,13 +1891,13 @@ object Dedup {
       df.select(col("comp")).rdd.aggregate((BigInt(0), 0L))(
         (acc, r) => (acc._1 + r.getLong(0), acc._2 + 1L),
         (x, y) => (x._1 + y._1, x._2 + y._2))
-    // pointer jump (path doubling): adopt the label OF the label — comp(v)
-    // is itself a node id, so a self-join on the (small) label table
-    // compresses paths geometrically and convergence is O(log diameter)
-    // rounds instead of O(diameter). Plain propagation needs as many rounds
-    // as the longest near-dup CHAIN, and a unified multi-lane edge set
-    // (exact + lexical + semantic) builds chains far longer than any single
-    // lane — the unified oracle caught exactly that at the 20-round cap.
+    // pointer jump: adopt the label OF the label — comp(v) is itself a
+    // node id, so a self-join on the (small) label table skips ahead where
+    // a node's label already points further down the chain. That cuts
+    // the rounds on chains whose ids rise along them (the unified oracle
+    // caught plain propagation at the 20-round cap on exactly such a
+    // chain), but on a chain with shuffled ids a round still closes about
+    // one hop, so rounds track the longest chain, not its log.
     def jump(ls: DataFrame): DataFrame =
       ls.as("l")
         .join(ls.select(col("id").as("jid"), col("comp").as("jcomp")).as("p"),
@@ -1918,6 +1923,10 @@ object Dedup {
       labels = next
       iter += 1
     }
+    if (nodes > 0L && !converged)
+      throw new IllegalStateException(
+        s"connected components did not converge in $iter rounds; raise " +
+          "spark.graft.dedup.ccMaxIters (a near-dup chain longer than the cap)")
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("cluster_id"))
     // no nodes: limit 0 folds to an empty relation at optimization, so the
     // router's final plan drops the loop side instead of scanning it

@@ -120,13 +120,21 @@ object Layout {
         sum(length(col("block_text"))).cast("long").as("clause_chars"))
   }
 
-  val clauseGraphSql: String =
-    s"""$blocksCte, sec AS (
+  /** The clause graph's section fill-forward over the `lab` CTE: each
+    * block's `section` is the key (`first_word_block_id`) of the last
+    * heading at or before it — the SQL twin of [[clauseGraphRawOf]]'s
+    * window, shared by every oracle that builds on clauses.
+    */
+  private[operators] val secCteSql: String =
+    s"""sec AS (
        |  SELECT doc_id, block_id, block_text, label,
        |    last_value(CASE WHEN label = 'heading' THEN first_word || '_' || CAST(block_id AS VARCHAR) END IGNORE NULLS)
        |      OVER (PARTITION BY doc_id ORDER BY block_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS section
        |  FROM lab
-       |)
+       |)""".stripMargin
+
+  val clauseGraphSql: String =
+    s"""$blocksCte, $secCteSql
        |SELECT doc_id, section,
        |  string_agg(block_text, ' ' ORDER BY block_id) AS clause_text,
        |  count(*) AS n_blocks,

@@ -67,18 +67,15 @@ object Orchestrator {
     */
   def pipelineOutput(spark: SparkSession, dir: String): DataFrame = {
     val recovered = formRecovered(spark, dir)
-    val required = QueryLogForm.fields.filter(_.required)
     val clauses = Layout.clauseGraph(spark, dir)
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_clauses"), sum(col("n_blocks")).cast("long").as("n_clause_blocks"))
-    val isComplete = required.map(f => col(f.name).isNotNull).reduce(_ && _)
-    val missing = concat_ws(",", required.map(f => when(col(f.name).isNull, f.name)): _*)
     recovered
       .join(clauses, Seq("doc_id"), "left")
       .withColumn("n_clauses", coalesce(col("n_clauses"), lit(0L)))
       .withColumn("n_clause_blocks", coalesce(col("n_clause_blocks"), lit(0L)))
-      .withColumn("is_complete", isComplete)
-      .withColumn("missing_fields", missing)
+      .withColumn("is_complete", Validation.isCompleteCol)
+      .withColumn("missing_fields", Validation.missingFieldsCol)
       .select(col("doc_id") +: QueryLogForm.fields.map(f => col(f.name)) :+
         col("n_recovered") :+ col("is_complete") :+ col("missing_fields") :+
         col("n_clauses") :+ col("n_clause_blocks"): _*)
@@ -87,12 +84,7 @@ object Orchestrator {
 
   val pipelineOutputSql: String =
     // block/label CTEs come from Layout (same constants as the Spark side)
-    s"""${Layout.blocksCte}, sec AS (
-       |  SELECT doc_id, block_id, label,
-       |    last_value(CASE WHEN label = 'heading' THEN first_word || '_' || CAST(block_id AS VARCHAR) END IGNORE NULLS)
-       |      OVER (PARTITION BY doc_id ORDER BY block_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS section
-       |  FROM lab
-       |), cg AS (
+    s"""${Layout.blocksCte}, ${Layout.secCteSql}, cg AS (
        |  SELECT doc_id, section, count(*) AS n_blocks
        |  FROM sec WHERE label IN ('paragraph','list_item') AND section IS NOT NULL
        |  GROUP BY doc_id, section

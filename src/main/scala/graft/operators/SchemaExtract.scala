@@ -100,12 +100,25 @@ object SchemaExtract {
        |FROM documents
        |ORDER BY doc_id""".stripMargin
 
-  /** The form-ETL oracles' `form` CTE: [[extractFieldsSql]]'s field
-    * ladders, one row per document, for `form_complete`, `form_recovered`
-    * and `pipeline_output` to build on.
+  /** The form-ETL oracles' `form` CTE: [[extractFieldsSql]]'s rows
+    * (doc_id, lang, the field ladders), for `form_complete`,
+    * `form_recovered`, `form_field_validate` and `pipeline_output` to
+    * build on.
     */
   private[operators] val formCteSql: String =
-    s"form AS (SELECT doc_id, ${QueryLogForm.fields.map(fieldSql).mkString(",\n  ")} FROM documents)"
+    s"form AS (SELECT doc_id, lang, ${QueryLogForm.fields.map(fieldSql).mkString(",\n  ")} FROM documents)"
+
+  /** How many of `schema`'s fields captured a value: every extraction
+    * row's `n_found` (and `form_complete`'s `n_filled`).
+    */
+  private[operators] def nFoundOf(schema: FormSchema): Column =
+    schema.fields.map(f => when(col(f.name).isNotNull, 1).otherwise(0))
+      .reduce(_ + _).cast("long")
+
+  /** SQL twin of [[nFoundOf]]. */
+  private[operators] def nFoundSql(schema: FormSchema): String =
+    schema.fields.map(f => s"CASE WHEN ${f.name} IS NOT NULL THEN 1 ELSE 0 END")
+      .mkString("CAST(", " + ", " AS BIGINT)")
 
   // ---- schema-parameterized extraction (form_filler.py:19 populate) -------
 
@@ -170,9 +183,7 @@ object SchemaExtract {
     val extracted = docs.select(col("doc_id"))
       .join(ctx, Seq("doc_id"), "left_outer")
       .select(col("doc_id") +: fields: _*)
-    val nFound = schema.fields
-      .map(f => when(col(f.name).isNotNull, 1).otherwise(0)).reduce(_ + _)
-    extracted.withColumn("n_found", nFound.cast("long"))
+    extracted.withColumn("n_found", nFoundOf(schema))
       .contractOrderBy("doc_id")
   }
 
@@ -193,14 +204,7 @@ object SchemaExtract {
     }.mkString(",\n    ")
     val fieldCols = schema.fields.zipWithIndex
       .map { case (f, i) => fieldSqlFrom(f, s"nullif(ctx_$i, '')") }.mkString(",\n  ")
-    val nFound = schema.fields
-      .map(f => s"CASE WHEN ${f.name} IS NOT NULL THEN 1 ELSE 0 END").mkString(" + ")
-    s"""$withClause, sec AS (
-       |  SELECT doc_id, block_id, block_text, label,
-       |    last_value(CASE WHEN label = 'heading' THEN first_word || '_' || CAST(block_id AS VARCHAR) END IGNORE NULLS)
-       |      OVER (PARTITION BY doc_id ORDER BY block_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS section
-       |  FROM lab
-       |), cg AS (
+    s"""$withClause, ${Layout.secCteSql}, cg AS (
        |  SELECT doc_id, section,
        |    string_agg(block_text, ' ' ORDER BY block_id) AS clause_text,
        |    CAST(split_part(section, '_', 2) AS BIGINT) AS hb
@@ -216,7 +220,7 @@ object SchemaExtract {
        |  $fieldCols
        |  FROM $docsRel d LEFT JOIN ctx ON d.doc_id = ctx.doc_id
        |)
-       |SELECT e.*, CAST($nFound AS BIGINT) AS n_found
+       |SELECT e.*, ${nFoundSql(schema)} AS n_found
        |FROM e
        |ORDER BY doc_id""".stripMargin
   }
@@ -254,11 +258,8 @@ object SchemaExtract {
       .withColumn("clause_case", (col("doc_id") % mod).cast("long"))
       .withColumn("text", concat(clause, col("text")))
       .select(col("doc_id") +: col("clause_case") +: schema.fields.map(f => fieldCol(f)): _*)
-    val nFound = schema.fields
-      .map(f => when(col(f.name).isNotNull, 1).otherwise(0))
-      .reduce(_ + _)
     extracted
-      .withColumn("n_found", nFound.cast("long"))
+      .withColumn("n_found", nFoundOf(schema))
       .contractOrderBy("doc_id")
   }
 
@@ -266,8 +267,6 @@ object SchemaExtract {
     val mod = clauses.length + 1
     val cases = clauses.zipWithIndex
       .map { case (txt, i) => s"WHEN $i THEN '$txt'" }.mkString(" ")
-    val nFound = schema.fields
-      .map(f => s"CASE WHEN ${f.name} IS NOT NULL THEN 1 ELSE 0 END").mkString(" + ")
     s"""WITH d AS (
        |  SELECT doc_id, CAST(doc_id % $mod AS BIGINT) AS clause_case,
        |    (CASE doc_id % $mod $cases ELSE '' END) || text AS text
@@ -276,7 +275,7 @@ object SchemaExtract {
        |  SELECT doc_id, clause_case, ${schema.fields.map(fieldSql).mkString(",\n  ")}
        |  FROM d
        |)
-       |SELECT e.*, CAST($nFound AS BIGINT) AS n_found
+       |SELECT e.*, ${nFoundSql(schema)} AS n_found
        |FROM e
        |ORDER BY doc_id""".stripMargin
   }

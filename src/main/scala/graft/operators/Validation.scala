@@ -143,12 +143,7 @@ object Validation {
   }
 
   val formFieldValidateSql: String =
-    s"""WITH form AS (
-       |  SELECT doc_id, lang,
-       |    nullif(regexp_extract(text, 'join (\\w+)', 1), '') AS first_join,
-       |    nullif(regexp_extract(text, 'table (\\w+)', 1), '') AS table_ref
-       |  FROM documents
-       |), staged AS (
+    s"""WITH ${SchemaExtract.formCteSql}, staged AS (
        |  SELECT doc_id,
        |    CASE WHEN doc_id % 3 = 0 THEN '2024-03-' || lpad(CAST(doc_id % 28 + 1 AS VARCHAR), 2, '0')
        |         WHEN doc_id % 3 = 1 THEN '2024-15-' || lpad(CAST(doc_id % 28 + 1 AS VARCHAR), 2, '0')
@@ -190,21 +185,25 @@ object Validation {
     * (form.py:49 `is_complete` / :60 `get_missing_fields`). Derived from the
     * SAME FormSchema as the extractor, like the reference.
     */
-  def formComplete(spark: SparkSession, dir: String): DataFrame = {
-    val form = SchemaExtract.extractFields(spark, dir)
-    val required = QueryLogForm.fields.filter(_.required)
-    val all = QueryLogForm.fields
-    val missing = concat_ws(",",
-      required.map(f => when(col(f.name).isNull, f.name)): _*)
-    val nFilled = all.map(f => when(col(f.name).isNotNull, 1).otherwise(0))
-      .reduce(_ + _).cast("long")
-    val isComplete = required.map(f => col(f.name).isNotNull).reduce(_ && _)
-    form.select(col("doc_id"), isComplete.as("is_complete"),
-        nFilled.as("n_filled"), missing.as("missing_fields"))
+  def formComplete(spark: SparkSession, dir: String): DataFrame =
+    SchemaExtract.extractFields(spark, dir)
+      .select(col("doc_id"), isCompleteCol.as("is_complete"),
+        SchemaExtract.nFoundOf(QueryLogForm).as("n_filled"),
+        missingFieldsCol.as("missing_fields"))
       .contractOrderBy("doc_id")
-  }
 
-  /** SQL twins of [[formComplete]]'s `is_complete` and `missing_fields`. */
+  /** Completeness over the QueryLogForm field columns: `is_complete` (every
+    * required field captured) and `missing_fields` (the uncaptured
+    * required fields, comma-joined) — shared with `pipeline_output`.
+    */
+  private[operators] val isCompleteCol: Column =
+    QueryLogForm.fields.filter(_.required).map(f => col(f.name).isNotNull).reduce(_ && _)
+
+  private[operators] val missingFieldsCol: Column =
+    concat_ws(",", QueryLogForm.fields.filter(_.required)
+      .map(f => when(col(f.name).isNull, f.name)): _*)
+
+  /** SQL twins of [[isCompleteCol]] and [[missingFieldsCol]]. */
   private[operators] val isCompleteSql: String =
     QueryLogForm.fields.filter(_.required).map(f => s"${f.name} IS NOT NULL").mkString(" AND ")
 
@@ -213,14 +212,11 @@ object Validation {
       .map(f => s"CASE WHEN ${f.name} IS NULL THEN '${f.name}' END")
       .mkString("concat_ws(',', ", ", ", ")")
 
-  val formCompleteSql: String = {
-    val nFilled = QueryLogForm.fields
-      .map(f => s"(CASE WHEN ${f.name} IS NOT NULL THEN 1 ELSE 0 END)").mkString(" + ")
+  val formCompleteSql: String =
     s"""WITH ${SchemaExtract.formCteSql}
        |SELECT doc_id, $isCompleteSql AS is_complete,
-       |  CAST($nFilled AS BIGINT) AS n_filled,
+       |  ${SchemaExtract.nFoundSql(QueryLogForm)} AS n_filled,
        |  $missingFieldsSql AS missing_fields
        |FROM form
        |ORDER BY doc_id""".stripMargin
-  }
 }

@@ -132,8 +132,9 @@ package object operators {
       require(v <= 100, s"spark.graft.prune.dropPct must be <= 100, got $v")
       v
     }
-    /** Connected-components iteration backstop
-      * (`spark.graft.dedup.ccMaxIters`).
+    /** Round cap of the distributed connected-components loop
+      * (`spark.graft.dedup.ccMaxIters`): rounds track the longest near-dup
+      * chain, and the loop throws when it reaches the cap unconverged.
       */
     def ccMaxIters: Int = positive("spark.graft.dedup.ccMaxIters", "20")
     /** Per-group in-row CC edge cap (`spark.graft.dedup.ccLocalMaxEdges`):

@@ -527,37 +527,29 @@ object StreamOps {
     * [[graft.operators.Curation.qualityFilterOf]] +
     * [[graft.operators.Curation.decontaminateFrom]] with identical values.
     *
-    * Why it's legal in a micro-batch plan with NO state: the batch quality
-    * filter derives `top_bg` by explode → two aggregations (stateful on a
-    * stream); here the same max-identical-bigram count comes from sorting
-    * the doc's OWN bigram array and taking the longest equal run —
-    * O(L log L) per document, same value by construction. The eval n-gram
-    * hash set rides as ONE static row (benchmark-sized — the same "eval
-    * side broadcasts" bet the batch sweep makes), equi-joined on a
-    * constant key so every micro-batch broadcast-joins it; membership is
-    * one `array_intersect` per doc. No aggregation, no watermark, no
-    * join state: runs forever at crawl rates.
+    * Why it's legal in a micro-batch plan with NO state: the quality
+    * counters and rules are the batch filter's own
+    * ([[graft.operators.Curation.withQualityCounters]],
+    * [[graft.operators.Curation.qualityVerdict]]), all in-row — `top_bg`
+    * sorts the doc's OWN bigram array and takes the longest equal run,
+    * O(L log L) per document. The eval n-gram hash set rides as ONE
+    * static row (benchmark-sized — the same "eval side broadcasts" bet the
+    * batch sweep makes), equi-joined on a constant key so every
+    * micro-batch broadcast-joins it; membership is one `array_intersect`
+    * per doc. No aggregation, no watermark, no join state: runs forever
+    * at crawl rates.
     *
     * `evalNgramHashes` = [[graft.operators.Curation.evalNgramHashesOf]]
     * of the benchmark corpus (static side, built once).
     */
   def curateStream(docsStream: DataFrame,
       evalNgramHashes: DataFrame): DataFrame = {
-    import graft.operators.{Curation, TextAnalysis}
-    val stopList = TextAnalysis.EnStopwords.map("'" + _ + "'").mkString(",")
+    import graft.operators.Curation
     val evalRow = evalNgramHashes
       .agg(sort_array(collect_set(col("h"))).as("eval_hs"))
       .withColumn("jk", lit(1))
-    val rShort = col("n_words") < Curation.MinWords
-    val rLong = col("n_words") > Curation.MaxWords
-    val rStop = col("n_stop") * 100 < col("n_words") * Curation.MinStopPct
-    val rRep = col("top_bg") * 100 > col("n_words") * Curation.MaxTopBigramPct
-    docsStream
-      .withColumn("ws", split(col("text"), " "))
-      .withColumn("n_words", size(col("ws")).cast("long"))
-      .withColumn("n_stop",
-        expr(s"size(filter(ws, w -> w IN ($stopList)))").cast("long"))
-      .withColumn("top_bg", expr(Curation.topBigramRunExpr))
+    val (qKeep, reasons) = Curation.qualityVerdict
+    Curation.withQualityCounters(docsStream)
       .withColumn("ng_hs", expr(Curation.hashedNgramExpr(Curation.ContamNgram)))
       .withColumn("jk", lit(1))
       .join(broadcast(evalRow), "jk")
@@ -565,12 +557,7 @@ object StreamOps {
       .withColumn("n_matched",
         size(array_intersect(col("ng_hs"), col("eval_hs"))).cast("long"))
       .select(col("doc_id"), col("n_words"), col("n_stop"), col("top_bg"),
-        (!rShort && !rLong && !rStop && !rRep).as("q_keep"),
-        array_join(concat(
-          when(rShort, array(lit("too_short"))).otherwise(array()),
-          when(rLong, array(lit("too_long"))).otherwise(array()),
-          when(rStop, array(lit("low_stopword"))).otherwise(array()),
-          when(rRep, array(lit("repetitive"))).otherwise(array())), ",").as("reasons"),
+        qKeep.as("q_keep"), reasons.as("reasons"),
         col("n_ngrams"), col("n_matched"),
         (col("n_matched") > 0).as("contam_exact"))
   }

@@ -88,4 +88,25 @@ class ClustersFromPairsSpec extends SparkSpec {
   test("empty pair set closes to an empty labeling on both paths") {
     route((name, _) => name == "empty")
   }
+
+  // a 40-edge chain over shuffled ids: the loop closes about one hop per
+  // round, so the default 20-round cap cannot label it (it used to come
+  // back as two clusters, silently); a cap with room converges to one
+  test("a chain the loop cannot close within ccMaxIters throws; a raised cap labels it") {
+    val ids = new scala.util.Random(7).shuffle((1L to 41L).toVector)
+    val chain = ids.sliding(2).map(p => (p(0), p(1))).toSeq.toDF("doc_a", "doc_b")
+    spark.conf.set("spark.graft.dedup.ccLocalMaxEdges", "1")
+    try {
+      val e = intercept[IllegalStateException](labels(Dedup.clustersFromPairs(chain)))
+      assert(e.getMessage.contains("spark.graft.dedup.ccMaxIters"), e.getMessage)
+      assert(e.getMessage.contains(s"${Dedup.CcMaxIters} rounds"), e.getMessage)
+      spark.conf.set("spark.graft.dedup.ccMaxIters", "64")
+      assert(labels(Dedup.clustersFromPairs(chain)) ==
+        ids.map(i => (i, 1L, 41L, i == 1L)).toSet)
+    } finally {
+      spark.conf.unset("spark.graft.dedup.ccLocalMaxEdges")
+      spark.conf.unset("spark.graft.dedup.ccMaxIters")
+      Dedup.releaseIntermediates()
+    }
+  }
 }
